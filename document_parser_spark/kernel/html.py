@@ -34,7 +34,7 @@ from typing import Any, Dict, List, Optional, Tuple
 
 from .normalize import normalize_scripts
 from .scanner import _DENSITY_MIN, Span, text_density
-from .structure import extract_table_auto, extract_table_auto_columns
+from .structure import document_to_dicts, extract_tables_columns
 
 _BOILER_ANCESTORS = frozenset({"nav", "header", "footer", "aside"})
 _DROP_TAGS = frozenset({"script", "style", "title"})  # title = head metadata
@@ -463,25 +463,16 @@ def scan_html(html_text: str) -> Tuple[List[Span], List[Dict[str, Any]]]:
     return scanner.spans, scanner.raw_tables
 
 
-def parse_html_document(
-    text: str, source: str = "html", columns: bool = False
-) -> Dict[str, Any]:
+def parse_html_columns(text: str, source: str = "html") -> Dict[str, Any]:
     """Full per-document HTML parse, same output contract as
-    pipeline.parse_document: {"spans", "tables", "markdown"}.
-
-    ``columns=True`` routes table structure through the columnar twin
-    (``extract_table_auto_columns``) so the Arrow batch builder gets
-    parallel lists with no per-cell dicts — same decision semantics (the
-    dispatch and header machinery are the shared functions), equality-gated
-    against the dict path in tests/test_columnar_arrow.py."""
+    pipeline.parse_document_columns: {"spans", "tables", "markdown"}, with
+    table cells as parallel column lists for the Arrow batch builder."""
     spans, raw_tables = scan_html(text)
-    extractor = extract_table_auto_columns if columns else extract_table_auto
-    tables = [
-        extractor(raw, table_index=idx, source=source, title=raw.get("title", ""))
-        for idx, raw in enumerate(raw_tables)
-    ]
-    for raw, table in zip(raw_tables, tables):
-        table["line_start"] = raw["line_start"]
-        table["line_end"] = raw["line_end"]
     markdown = "\n".join(s["text"] for s in spans if s["kind"] != "media")
-    return {"spans": spans, "tables": tables, "markdown": markdown}
+    return {"spans": spans, "tables": extract_tables_columns(raw_tables, source), "markdown": markdown}
+
+
+def parse_html_document(text: str, source: str = "html") -> Dict[str, Any]:
+    """``parse_html_columns`` with dict-form tables (one dict per cell) —
+    the shape pipeline.parse_document returns."""
+    return document_to_dicts(parse_html_columns(text, source))

@@ -1,9 +1,10 @@
 """Per-document parse pipeline (pure Python, no Spark).
 
-``parse_document`` is the single workhorse composed into the vectorized
-Arrow UDF (operators/extract.py) AND used directly as the golden oracle in
-tests — one shared kernel guarantees Spark-vs-oracle span-sequence equality
-by construction (SURVEY.md §5.2 item 1).
+``parse_document_columns`` is the single workhorse composed into the
+vectorized Arrow UDF (operators/extract.py); ``parse_document`` is the same
+parse with dict-form tables, used directly as the golden oracle in tests —
+one shared kernel guarantees Spark-vs-oracle span-sequence equality by
+construction (SURVEY.md §5.2 item 1).
 
 Stage order parity with the reference flagship
 (/root/reference/use_marker_converter.py:600-648):
@@ -17,13 +18,16 @@ from __future__ import annotations
 import re
 from typing import Any, Dict, List, Optional, Tuple
 
+from .html import looks_like_html, parse_html_columns
 from .normalize import normalize_scripts
 from .scanner import scan_markdown
-from .structure import extract_table_auto
+from .structure import document_to_dicts, extract_tables_columns
 
 
-def parse_document(text: str, source: str = "markdown") -> Dict[str, Any]:
-    """Full per-document parse: interleaved spans + structured tables.
+def parse_document_columns(text: str, source: str = "markdown") -> Dict[str, Any]:
+    """Full per-document parse: interleaved spans + structured tables, the
+    tables columnar (``cells_cols``/``header_cells_cols`` parallel lists —
+    the shape the Arrow batch builder in operators/extract.py consumes).
 
     Returns ``{"spans": [...], "tables": [...], "markdown": normalized}``.
 
@@ -32,46 +36,18 @@ def parse_document(text: str, source: str = "markdown") -> Dict[str, Any]:
     tag-depth/link-density/text-density boilerplate); everything else is the
     reference-parity markdown scanner.
     """
-    from .html import looks_like_html, parse_html_document
-
     if looks_like_html(text):
-        return parse_html_document(text, source="html")
+        return parse_html_columns(text)
     markdown = normalize_scripts(text)
     spans, raw_tables = scan_markdown(markdown)
-    tables = [
-        extract_table_auto(raw, table_index=idx, source=source, title=raw.get("title", ""))
-        for idx, raw in enumerate(raw_tables)
-    ]
-    for raw, table in zip(raw_tables, tables):
-        table["line_start"] = raw["line_start"]
-        table["line_end"] = raw["line_end"]
-    return {"spans": spans, "tables": tables, "markdown": markdown}
+    return {"spans": spans, "tables": extract_tables_columns(raw_tables, source), "markdown": markdown}
 
 
-def parse_document_columns(text: str, source: str = "markdown") -> Dict[str, Any]:
-    """Columnar twin of ``parse_document`` for the Arrow batch builder:
-    identical decision semantics (the HTML/markdown dispatch, scan, and
-    structure machinery are the very same functions), but each table carries
-    ``cells_cols``/``header_cells_cols`` parallel lists instead of per-cell
-    dicts — the per-cell dict literal was ~25% of parse time and the Arrow
-    conversion re-walked every dict again.  HTML documents take the same
-    columnar structure twin via ``parse_html_document(columns=True)``
-    (equality-gated in tests/test_columnar_arrow.py)."""
-    from .html import looks_like_html, parse_html_document
-    from .structure import extract_table_auto_columns
-
-    if looks_like_html(text):
-        return parse_html_document(text, source="html", columns=True)
-    markdown = normalize_scripts(text)
-    spans, raw_tables = scan_markdown(markdown)
-    tables = [
-        extract_table_auto_columns(raw, table_index=idx, source=source, title=raw.get("title", ""))
-        for idx, raw in enumerate(raw_tables)
-    ]
-    for raw, table in zip(raw_tables, tables):
-        table["line_start"] = raw["line_start"]
-        table["line_end"] = raw["line_end"]
-    return {"spans": spans, "tables": tables, "markdown": markdown}
+def parse_document(text: str, source: str = "markdown") -> Dict[str, Any]:
+    """``parse_document_columns`` with dict-form tables (one dict per cell,
+    one per header cell) — the shape the golden and reference-parity
+    oracles compare."""
+    return document_to_dicts(parse_document_columns(text, source))
 
 
 # --- H7: merged-cell span inference (sink-side) -----------------------------

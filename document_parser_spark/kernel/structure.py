@@ -155,12 +155,11 @@ def detect_column_groups(column_headers: List[Dict[str, Any]]) -> List[Dict[str,
 
 
 def extract_vertical_columns(raw: Dict[str, Any], table_index: int, source: str = "markdown", title: str = "") -> Dict[str, Any]:
-    """Columnar twin of ``extract_vertical``: identical decision semantics,
-    but cells come back as parallel column lists (``cells_cols`` /
-    ``header_cells_cols``) instead of one dict per cell — the shape the
-    Arrow batch builder (operators/extract.py) consumes directly.  The dict
-    form is DERIVED from this one (``extract_vertical`` wraps it), so the
-    parity surface lives exactly once."""
+    """Vertical extraction with cells as parallel column lists
+    (``cells_cols`` / ``header_cells_cols``) instead of one dict per cell —
+    the shape the Arrow batch builder (operators/extract.py) consumes
+    directly.  The dict form is DERIVED from this one (``extract_vertical``
+    wraps it), so the parity surface lives exactly once."""
     data = [raw["headers"]] + raw["rows"]
     ncols = len(raw["headers"])
     names = ["Key", "Value"] if ncols == 2 else [f"Column {i}" for i in range(ncols)]
@@ -238,37 +237,12 @@ def extract_vertical(raw: Dict[str, Any], table_index: int, source: str = "markd
     return columns_to_dicts(extract_vertical_columns(raw, table_index, source, title))
 
 
-def dicts_to_columns(table: Dict[str, Any]) -> Dict[str, Any]:
-    """Inverse of ``columns_to_dicts`` — lift a dict-form table (e.g. from
-    an external ingest adapter that emits reference-shaped dicts) into the
-    columnar shape the Arrow batch builder consumes.  The in-tree kernels
-    (markdown AND html) emit columns natively via extract_*_columns; this
-    stays as the seam for dict-form sources, round-trip-gated in
-    tests/test_columnar_arrow.py."""
-    cells = table.pop("cells")
-    table["cells_cols"] = (
-        [c["row"] for c in cells],
-        [c["col"] for c in cells],
-        [c["header"] for c in cells],
-        [c["header_levels"] for c in cells],
-        [c["text"] for c in cells],
-        [c["is_numeric"] for c in cells],
-    )
-    header_cells = table.pop("header_cells")
-    table["header_cells_cols"] = (
-        [c["header_row"] for c in header_cells],
-        [c["col"] for c in header_cells],
-        [c["text"] for c in header_cells],
-    )
-    return table
-
-
 def extract_horizontal_columns(raw: Dict[str, Any], table_index: int, source: str = "markdown", title: str = "") -> Dict[str, Any]:
-    """Columnar twin of ``extract_horizontal`` — same header machinery, but
-    the per-cell output is parallel column lists built with C-speed
-    ``extend`` over precomputed per-row slices (the per-cell dict literal
-    was ~25% of whole-document parse time; the Arrow batch builder consumes
-    these columns with no per-cell Python at all).  The dict form is derived
+    """Horizontal extraction in columnar form: the per-cell output is
+    parallel column lists built with C-speed ``extend`` over precomputed
+    per-row slices (the per-cell dict literal was ~25% of whole-document
+    parse time; the Arrow batch builder consumes these columns with no
+    per-cell Python at all).  The dict form is derived
     (``extract_horizontal`` wraps this), so the reference-parity decision
     logic lives exactly once."""
     all_rows = [raw["headers"]] + raw["rows"]
@@ -356,7 +330,8 @@ def extract_horizontal(raw: Dict[str, Any], table_index: int, source: str = "mar
 
 
 def extract_table_auto_columns(raw: Dict[str, Any], table_index: int, source: str = "markdown", title: str = "") -> Dict[str, Any]:
-    """Columnar dispatch twin of ``extract_table_auto``."""
+    """``extract_table_auto`` with columnar cells (see the ``*_columns``
+    extractors)."""
     if detect_table_structure(raw["headers"], raw["rows"]) == "vertical":
         return extract_vertical_columns(raw, table_index, source, title)
     return extract_horizontal_columns(raw, table_index, source, title)
@@ -367,3 +342,27 @@ def extract_table_auto(raw: Dict[str, Any], table_index: int, source: str = "mar
     if detect_table_structure(raw["headers"], raw["rows"]) == "vertical":
         return extract_vertical(raw, table_index, source, title)
     return extract_horizontal(raw, table_index, source, title)
+
+
+def extract_tables_columns(raw_tables: List[Dict[str, Any]], source: str) -> List[Dict[str, Any]]:
+    """Columnar structure for every raw table of one document, in scan
+    order, each tagged with its source ``line_start``/``line_end``."""
+    tables = []
+    for idx, raw in enumerate(raw_tables):
+        table = extract_table_auto_columns(raw, table_index=idx, source=source, title=raw.get("title", ""))
+        table["line_start"] = raw["line_start"]
+        table["line_end"] = raw["line_end"]
+        tables.append(table)
+    return tables
+
+
+def document_to_dicts(doc: Dict[str, Any]) -> Dict[str, Any]:
+    """Dict form of a columnar document parse (``{"spans", "tables",
+    "markdown"}``): each table goes through ``columns_to_dicts`` and then
+    gets its line span back, so the key order stays the canonical one
+    (..., ``header_cells``, ``cells``, ``line_start``, ``line_end``)."""
+    for table in doc["tables"]:
+        line_span = table.pop("line_start"), table.pop("line_end")
+        columns_to_dicts(table)
+        table["line_start"], table["line_end"] = line_span
+    return doc

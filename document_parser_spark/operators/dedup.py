@@ -361,8 +361,7 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
     Beyond"): each round hooks whole trees onto component minima, so
     convergence is O(log n) ROUNDS regardless of graph diameter — a
     10^6-node chain converges in ~20 rounds where per-hop min-label
-    propagation (kept as ``duplicate_clusters_propagation`` for
-    cross-checking) needs 10^6.  Every round is two groupBy(min)+join
+    propagation needs 10^6.  Every round is two groupBy(min)+join
     shuffles; convergence = edge-set fixpoint, checked with limit(1) counts
     so the driver moves no data.
 
@@ -428,68 +427,6 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
     # with the RDD, no explicit unpersist (and unpersisting here would drop
     # the data out from under the returned frame)
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
-
-
-def duplicate_clusters_propagation(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
-    """Per-hop min-label propagation twin of ``duplicate_clusters`` — one
-    round per graph-diameter hop.  Kept as the cross-check implementation
-    (tests assert both produce identical labelings); the star variant is the
-    default because diameter-bounded rounds don't survive adversarial
-    chains."""
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .distinct()
-        .persist()
-    )
-    # localCheckpoint per round (same reason as the star variant): the label
-    # frame's plan nests once per round, and 20 un-truncated rounds of
-    # join+agg lineage exhaust driver heap during analysis before the
-    # convergence guard can fire
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .localCheckpoint(eager=True)
-    )
-
-    changed = 0
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.src == labels.doc_id)
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.min("label").alias("n_label"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(F.col("label"), F.coalesce("n_label", F.col("label"))).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    if changed != 0:
-        # the oracle (recursive-CTE fixpoint) and any dedup consumer need the
-        # CONVERGED labeling; returning a partial one silently mislabels
-        # components with diameter > max_iter
-        raise RuntimeError(
-            f"duplicate_clusters did not converge within max_iter={max_iter} "
-            "rounds (component diameter exceeds the bound); raise max_iter or "
-            "switch to the large-star/small-star variant"
-        )
-    out = labels.select("doc_id", F.col("label").alias("cluster_id"))
-    return out
 
 
 def canonical_keep(

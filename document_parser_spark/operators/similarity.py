@@ -42,7 +42,7 @@ Paths:
     it; build-once / query-many): the corpus pass scans only the stored
     64 B sketches and the float column is read exactly once, for the
     rerank join.  Byte-identical to the inline twins; amortization
-    measured in BASELINE.md (scripts/ann_index_study.py).
+    measured in BASELINE.md.
 
 Determinism: hyperplane signs are the parity of the first md5 nibble of
 "plane:pos" — reproducible in Python (sign matrix is computed driver-side

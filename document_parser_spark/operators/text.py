@@ -117,57 +117,22 @@ def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def language_best_struct(text_col: Column) -> Column:
-    """ONE pass over the word array: a struct accumulator counts stopword
-    hits for every language simultaneously; the aggregate's ``finish`` lambda
-    does the argmax, so the word split is evaluated exactly once per row
-    (round 1 inlined the split into 4 per-language structs — ~4× the regex
-    work, VERDICT.md What's-wrong #6).
-
-    Returns struct<hits:int, lang:string> — max hits, ties broken by language
-    code DESCENDING (struct max compares field-by-field)."""
-    w = words(F.lower(text_col))
-    langs = sorted(STOPWORDS)
-    zero = F.struct(*[F.lit(0).alias(lang) for lang in langs])
-
-    def merge(acc: Column, x: Column) -> Column:
-        return F.struct(
-            *[
-                (acc[lang] + F.when(x.isin(*STOPWORDS[lang]), 1).otherwise(0)).alias(lang)
-                for lang in langs
-            ]
-        )
-
-    def finish(acc: Column) -> Column:
-        return F.array_max(
-            F.array(
-                *[
-                    F.struct(acc[lang].alias("hits"), F.lit(lang).alias("lang"))
-                    for lang in langs
-                ]
-            )
-        )
-
-    return F.aggregate(w, zero, merge, finish)
-
-
 _LANG_WORDS_UDF = None
 
 
 def language_words_arrow(col: Column) -> Column:
-    """Arrow-batched twin of ``language_best_struct`` PLUS the word count,
-    in one pass: struct<hits:int, lang:string, n_words:long>.
+    """Per-document stopword-hit language argmax PLUS the word count, in one
+    Arrow pass: struct<hits:int, lang:string, n_words:long>.
 
-    Measured r04 (16 cores, 45k ~850-word docs): the interpreted
-    higher-order aggregate adds +11.2 s to the stage, this twin +1.8 s with
+    Measured r04 (16 cores, 45k ~850-word docs): an interpreted
+    higher-order aggregate adds +11.2 s to the stage, this pass +1.8 s with
     the word count included.  It lowers the text once (C-speed), splits on
     the Java-``\\s`` class, folds the split through a ``Counter`` so each
     DISTINCT word pays ONE dict probe against a word→language-indices
     table, and argmaxes with the identical (hits, lang) struct-max
-    tie-break (greatest hits, then greatest language code).  Byte-equal to
-    the Column form on every corpus — equality-gated in
-    tests/test_curate_run.py; the Column twin stays the oracled
-    ``language_id`` query's form."""
+    tie-break (greatest hits, then greatest language code).  Checked against
+    the ``language_id`` and ``text_stats`` DuckDB oracles on an adversarial
+    corpus in tests/test_curate_run.py."""
     global _LANG_WORDS_UDF, _JAVA_WS_RX
     if _JAVA_WS_RX is None:
         import re as _re
@@ -233,28 +198,11 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     (max hits; ties broken by language code DESCENDING; 'und' when no hits).
     The SQL mirror is ``ORDER BY hits DESC, lang DESC LIMIT 1`` per doc.
 
-    r06: scores through ``language_words_arrow`` (the byte-equal Arrow
-    twin — the interpreted higher-order aggregate measured +11.2 s vs
-    +1.8 s over 45k docs at 16 cores, r04) instead of the Column
-    aggregate; ``language_id_column_twin`` keeps the HOF form for
-    cross-checking."""
+    r06: scores through ``language_words_arrow`` — an interpreted
+    higher-order aggregate measured +11.2 s vs +1.8 s over 45k docs at 16
+    cores (r04)."""
     return (
         df.withColumn("_best", language_words_arrow(F.col(text_col)))
-        .select(
-            "doc_id",
-            F.when(F.col("_best.hits") > 0, F.col("_best.lang"))
-            .otherwise(F.lit("und"))
-            .alias("lang_pred"),
-            F.col("_best.hits").cast("long").alias("lang_hits"),
-        )
-    )
-
-
-def language_id_column_twin(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """The interpreted higher-order-aggregate form — kept ONLY as the
-    equality cross-check for the Arrow scoring pass."""
-    return (
-        df.withColumn("_best", language_best_struct(F.col(text_col)))
         .select(
             "doc_id",
             F.when(F.col("_best.hits") > 0, F.col("_best.lang"))
@@ -320,8 +268,8 @@ def bigram_novelty(
     # the broadcast probe + per-doc rollup) read that map-only stream, and
     # every output falls out of the ONE rollup (n_bigrams = Σcnt,
     # n_distinct = row count at the distinct grain), so there is no second
-    # rollup and no doc_id join.  The exploded-join formulation stays as
-    # ``bigram_novelty_exploded_twin`` (equality test in tests/test_dedup.py).
+    # rollup and no doc_id join.  tests/test_dedup.py checks it against a
+    # pure-Python reference.
     per = df.select(
         "doc_id", F.explode(_bigram_counts_arrow(F.col(text_col))).alias("bc")
     ).select("doc_id", F.col("bc.bg").alias("bigram"), F.col("bc.cnt").alias("cnt"))
@@ -393,39 +341,6 @@ def _bigram_counts_arrow(col: Column) -> Column:
     return _BIGRAM_COUNTS_UDF(col)
 
 
-def bigram_novelty_exploded_twin(
-    df: DataFrame, text_col: str = "text", common_df: int = 3
-) -> DataFrame:
-    """The exploded-stream formulation (explode → (doc, bigram) groupBy →
-    common set → probe → rollup) — kept ONLY as the equality cross-check
-    for the Arrow-counted pass."""
-    per = (
-        df.select(
-            "doc_id", F.explode(word_shingles(F.col(text_col), 2)).alias("bigram")
-        )
-        .groupBy("doc_id", "bigram")
-        .agg(F.count("*").alias("cnt"))
-    )
-    common = (
-        per.groupBy("bigram")
-        .agg(F.count("*").alias("dfreq"))
-        .filter(F.col("dfreq") >= common_df)
-        .select("bigram", F.lit(1).alias("_common"))
-    )
-    probed = per.join(F.broadcast(common), "bigram", "left")
-    return (
-        probed.groupBy("doc_id")
-        .agg(
-            F.sum("cnt").alias("n_bigrams"),
-            F.count("*").alias("n_distinct"),
-            F.sum(F.when(F.col("_common") == 1, F.col("cnt")).otherwise(0)).alias(
-                "n_common"
-            ),
-            F.count(F.when(F.col("_common") == 1, 1)).alias("n_common_distinct"),
-        )
-    )
-
-
 #: Hashing-trick classifier dials (frozen — part of the oracle surface).
 #: 2^18 feature buckets; weights in [-10, 10] via a Knuth multiplicative mix.
 CLF_N_BUCKETS = 1 << 18
@@ -477,8 +392,7 @@ def hash_classifier_score(
     - ``weights=None`` (default): the weight is a closed-form integer mix of
       the bucket id (the deterministic stand-in for a trained model), so the
       WHOLE score folds into one Arrow map pass — zero shuffle, zero join;
-      the scale shape a 100 TB curation scan wants.  A pure-Column twin
-      (``hash_classifier_score_column_twin``) is equality-gated in tests.
+      the scale shape a 100 TB curation scan wants.
     - ``weights=`` a (bucket, weight) frame: explode features → broadcast
       hash join on bucket → one per-doc sum.  The weight table is ≤ 2 MB at
       2^18 buckets — always broadcast, so the only shuffle is the final
@@ -561,30 +475,6 @@ def _clf_score_arrow(col: Column) -> Column:
     return _CLF_UDF(col)
 
 
-def hash_classifier_score_column_twin(
-    df: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Pure-Column closed-form twin (codegen md5 + higher-order aggregate) —
-    kept as the equality cross-check for the Arrow path, per the repo
-    convention (interpreted HOF lambdas cost ~µs/element; the Arrow pass is
-    the shipped default)."""
-    t = F.col(text_col)
-    w = words(t)
-    n = F.size(w)
-    feats = F.concat(w, word_shingles_column_twin(t, 2))
-    score = F.aggregate(
-        F.transform(feats, lambda x: _clf_weight_of_bucket(_clf_bucket(x))),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    n_feats = F.when(n >= 1, n * 2 - 1).otherwise(F.lit(0)).cast("long")
-    return df.select(
-        "doc_id",
-        score.alias("clf_score"),
-        n_feats.alias("n_feats"),
-    ).withColumn("clf_ok", F.col("clf_score") >= 0)
-
-
 _REP_STATS_UDF = None
 
 
@@ -596,11 +486,10 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     r06: every output is derivable from the doc's own token stream, so the
     whole operator is ONE Arrow map pass (per-doc Counter — the pinned
     "per-document computations beat explode+groupBy" lesson): zero
-    shuffles, no joins, where the explode twin paid two exploded
+    shuffles, no joins, where the exploded form paid two exploded
     two-level aggregations plus two left joins.  The split is the
-    byte-identical Java-\\s twin used by word_shingles; the exploded shape
-    stays as ``repetition_stats_column_twin`` with an equality gate in
-    tests/test_dedup.py."""
+    Java-\\s split used by word_shingles; tests/test_dedup.py checks the
+    pass against the ``repetition_stats`` DuckDB oracle."""
     global _REP_STATS_UDF, _JAVA_WS_RX
     if _JAVA_WS_RX is None:
         import re as _re
@@ -639,47 +528,6 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
         _REP_STATS_UDF = rep_udf
     return df.select("doc_id", _REP_STATS_UDF(F.col(text_col)).alias("_r")).select(
         "doc_id", "_r.*"
-    )
-
-
-def repetition_stats_column_twin(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """The exploded two-level-aggregation formulation — kept ONLY as the
-    equality cross-check for the Arrow pass (zero-shuffle map pass above)."""
-    t = F.col(text_col)
-    unigrams = (
-        df.select("doc_id", F.explode(words(t)).alias("w"))
-        .groupBy("doc_id", "w")
-        .agg(F.count("*").alias("cnt"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("cnt").alias("n_words"),
-            F.count("*").alias("n_distinct_words"),
-            F.max("cnt").alias("top_word_count"),
-        )
-    )
-    bigrams = (
-        df.select("doc_id", F.explode(word_shingles(t, 2)).alias("bg"))
-        .groupBy("doc_id", "bg")
-        .agg(F.count("*").alias("cnt"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("cnt").alias("n_bigrams"),
-            F.max("cnt").alias("top_bigram_count"),
-        )
-    )
-    zero = F.lit(0).cast("long")
-    return (
-        df.select("doc_id")
-        .join(unigrams, "doc_id", "left")
-        .join(bigrams, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_words", zero).alias("n_words"),
-            F.coalesce("n_distinct_words", zero).alias("n_distinct_words"),
-            F.coalesce("top_word_count", zero).alias("top_word_count"),
-            F.coalesce("n_bigrams", zero).alias("n_bigrams"),
-            F.coalesce("top_bigram_count", zero).alias("top_bigram_count"),
-        )
     )
 
 
@@ -779,7 +627,7 @@ def word_shingles(col: Column, k: int = 3) -> Column:
     document.  Harmless at 200 words, a stall at 50k (pathological web
     docs).  The UDF is one linear pass per doc; outputs are byte-identical
     (ASCII-whitespace split, exactly Spark's ``split(trim(x), '\\s+')``) —
-    tests/test_dedup.py asserts equality against the Column twin."""
+    tests/test_dedup.py checks it against a pure-Python split."""
     global _JAVA_WS_RX
     if _JAVA_WS_RX is None:
         import re as _re
@@ -806,17 +654,3 @@ def word_shingles(col: Column, k: int = 3) -> Column:
 
         _SHINGLE_UDFS[k] = make(k)
     return _SHINGLE_UDFS[k](col)
-
-
-def word_shingles_column_twin(col: Column, k: int = 3) -> Column:
-    """The pure-Column formulation — O(words²), kept ONLY as the equality
-    cross-check for the Arrow path (and for plans that must stay UDF-free
-    on provably small text)."""
-    w = words(col)
-    n = F.size(w)
-    return F.when(n < k, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), n - k),
-            lambda i: F.array_join(F.slice(w, i + 1, k), " "),
-        )
-    )

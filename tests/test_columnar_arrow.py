@@ -1,25 +1,22 @@
-"""Equality gate for the columnar Arrow parse path (operators/extract.py).
+"""Equality gate for the Arrow parse-batch builder (operators/extract.py).
 
-The columnar kernel twin (structure.extract_*_columns + the offset-based
-Arrow batch builder) must produce BYTE-IDENTICAL Arrow arrays to the dict
-kernel + pa.array(list-of-dicts) path, on every corpus shape we ship:
-synthetic markdown, synthetic HTML (native columnar twin via
-parse_html_document(columns=True)), the fixture corpus, and the degenerate edges (empty
-string, None, no tables, error capture)."""
+``_build_parse_arrays`` assembles the spans/tables/error arrays by hand from
+flat lists and offset vectors.  Its reference is pyarrow's own conversion of
+the dict-form parse (``pa.array(<kernel.parse_document output>, type=...)``),
+which shares no code with the hand-built offsets.  Corpora: synthetic
+markdown, synthetic HTML, the fixture corpus, and the degenerate edges
+(empty string, None, no tables).  The Spark roundtrip is checked against
+``kernel.parse_document`` document by document."""
 
 import pyarrow as pa
-import pytest
 
 from document_parser_spark.corpus import (
     fixture_documents,
     synthesize_doc,
     synthesize_html_doc,
 )
-from document_parser_spark.operators.extract import (
-    _build_parse_arrays,
-    _parse_one,
-    _parse_one_columns,
-)
+from document_parser_spark.kernel import parse_document
+from document_parser_spark.operators.extract import _build_parse_arrays, _parse_one
 from document_parser_spark.schemas import PARSE_RESULT
 
 
@@ -32,38 +29,38 @@ def _types():
     )
 
 
-def _assert_paths_equal(texts):
+def _assert_builder_matches_pyarrow(texts):
     spans_type, tables_type = _types()
-    res_d = [_parse_one(t) for t in texts]
-    sd = pa.array([r[0] for r in res_d], type=spans_type)
-    td = pa.array([r[1] for r in res_d], type=tables_type)
-    ed = pa.array([r[2] for r in res_d], type=pa.string())
+    dict_form = [parse_document(t if t is not None else "") for t in texts]
+    sd = pa.array([d["spans"] for d in dict_form], type=spans_type)
+    td = pa.array([d["tables"] for d in dict_form], type=tables_type)
+    ed = pa.array([None] * len(texts), type=pa.string())
     sc, tc, ec = _build_parse_arrays(
-        [_parse_one_columns(t) for t in texts], spans_type, tables_type
+        [_parse_one(t) for t in texts], spans_type, tables_type
     )
     assert sc.type.equals(sd.type) and tc.type.equals(td.type)
-    assert sc.equals(sd), "spans arrays diverge between dict and columnar paths"
-    assert tc.equals(td), "tables arrays diverge between dict and columnar paths"
+    assert sc.equals(sd), "spans arrays diverge from pyarrow's conversion"
+    assert tc.equals(td), "tables arrays diverge from pyarrow's conversion"
     assert ec.equals(ed)
 
 
 def test_columnar_equals_dict_on_synthetic_markdown():
-    _assert_paths_equal([synthesize_doc(i)["text"] for i in range(300)])
+    _assert_builder_matches_pyarrow([synthesize_doc(i)["text"] for i in range(300)])
 
 
 def test_columnar_equals_dict_on_synthetic_html():
-    _assert_paths_equal([synthesize_html_doc(i)["text"] for i in range(100)])
+    _assert_builder_matches_pyarrow([synthesize_html_doc(i)["text"] for i in range(100)])
 
 
 def test_columnar_equals_dict_on_fixtures():
     fx = fixture_documents()
     texts = [d["text"] if isinstance(d, dict) else d for d in fx]
     assert texts, "fixture corpus is empty"
-    _assert_paths_equal(texts)
+    _assert_builder_matches_pyarrow(texts)
 
 
 def test_columnar_equals_dict_on_edges():
-    _assert_paths_equal(
+    _assert_builder_matches_pyarrow(
         [
             "",
             None,
@@ -75,29 +72,10 @@ def test_columnar_equals_dict_on_edges():
     )
 
 
-def test_dicts_to_columns_inverts_columns_to_dicts():
-    """The external-dict-source seam: lifting the dict form of a table must
-    reproduce exactly what the columnar extractor emits natively, on both
-    dispatch branches (horizontal + vertical)."""
-    from document_parser_spark.kernel.structure import (
-        dicts_to_columns,
-        extract_table_auto,
-        extract_table_auto_columns,
-    )
-
-    raws = [
-        {"headers": ["A", "B"], "rows": [["1", "2"], ["3", "4"]], "title": ""},
-        {"headers": ["Key", "Val"], "rows": [["alpha", "x"], ["beta", "y"]], "title": ""},
-    ]
-    for raw in raws:
-        native = extract_table_auto_columns(raw, table_index=0)
-        lifted = dicts_to_columns(extract_table_auto(raw, table_index=0))
-        assert lifted == native
-
-
 def test_spark_roundtrip_matches_dict_path(spark):
-    """parse_documents default (columnar) vs columnar=False through a real
-    mapInArrow roundtrip — same collected rows."""
+    """parse_documents through a real mapInArrow roundtrip returns, per
+    document, exactly the dict-form kernel.parse_document spans and
+    tables."""
     from document_parser_spark.operators.extract import parse_documents
 
     rows = [(str(i), synthesize_doc(i)["text"]) for i in range(60)] + [
@@ -105,6 +83,12 @@ def test_spark_roundtrip_matches_dict_path(spark):
         ("e0", ""),
     ]
     df = spark.createDataFrame(rows, "doc_id string, text string")
-    got_col = parse_documents(df).orderBy("doc_id").collect()
-    got_dict = parse_documents(df, columnar=False).orderBy("doc_id").collect()
-    assert got_col == got_dict
+    got = {r["doc_id"]: r for r in parse_documents(df).collect()}
+    assert sorted(got) == sorted(doc_id for doc_id, _ in rows)
+    for doc_id, text in rows:
+        want = parse_document(text)
+        row = got[doc_id]
+        assert row["error"] is None
+        assert [s.asDict() for s in row["spans"]] == want["spans"], doc_id
+        assert [t.asDict(recursive=True) for t in row["tables"]] == want["tables"], doc_id
+    assert any(got[doc_id]["tables"] for doc_id, _ in rows)  # tables exercised

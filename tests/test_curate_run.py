@@ -176,13 +176,18 @@ def test_resume_skips_completed_and_crash_recovers(spark, tmp_path):
 
 
 def test_gate_arrow_equals_column(spark):
-    """The Arrow language+word-count pass and the pure-Column form admit the
-    SAME rows with the SAME added columns — on real sf docs (markdown with
-    tabs/newlines), the synthetic curation corpus, and adversarial edges
-    (empty / whitespace-only / unicode / tie-break-forcing texts)."""
+    """The gate admits exactly the rows the DuckDB oracles admit — the
+    ``text_stats`` quality rule (n_words >= 5, n_chars >= 20, punct < half)
+    and the ``language_id`` argmax — with the oracle's ``n_words`` and
+    ``lang_pred``; and ``language_id`` equals its oracle on every row.  The
+    corpus is real sf docs (markdown with tabs/newlines), the synthetic
+    curation corpus, and adversarial edges (empty / whitespace-only /
+    unicode / tie-break-forcing texts)."""
     import pyspark.sql.functions as F2
 
+    from document_parser_spark.operators import text as text_ops
     from document_parser_spark.plans.curate import synthetic_curation_corpus
+    from tests.conftest import run_oracle_sql
 
     edges = [
         (9001, ""),
@@ -196,36 +201,37 @@ def test_gate_arrow_equals_column(spark):
     sf = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
     )
+    # the synthetic ids (0..59) would collide with the sf ids (0..499):
+    # shift them so doc_id keys every row of the doc_id-keyed oracles
     corpus = (
         synthetic_curation_corpus(spark, 60)
+        .withColumn("doc_id", F2.col("doc_id") + 100_000)
         .unionByName(spark.createDataFrame(edges, "doc_id long, text string"))
         .unionByName(sf)
     )
-    cols = ["doc_id", "n_words", "lang_pred"]
-    a = sorted(
+    rows = [(r["doc_id"], r["text"]) for r in corpus.collect()]
+    assert len(rows) == len({d for d, _ in rows}) == 567
+
+    keep = ("en", "und", "de", "fr", "es")
+    stats = run_oracle_sql("text_stats", rows)
+    lang = dict((r[0], r[1]) for r in run_oracle_sql("language_id", rows))
+    want = sorted(
+        (doc_id, n_words, lang[doc_id])
+        for doc_id, _, n_words, *_, quality_ok in stats
+        if quality_ok and lang[doc_id] in keep
+    )
+    got = sorted(
         tuple(r)
-        for r in quality_language_gate(corpus, keep_langs=("en", "und", "de", "fr", "es"), use_arrow=True)
-        .select(*cols)
+        for r in quality_language_gate(corpus, keep_langs=keep)
+        .select("doc_id", "n_words", "lang_pred")
         .collect()
     )
-    b = sorted(
-        tuple(r)
-        for r in quality_language_gate(corpus, keep_langs=("en", "und", "de", "fr", "es"), use_arrow=False)
-        .select(*cols)
-        .collect()
-    )
-    assert a == b
-    assert len(a) > 50  # the corpus actually exercises the gate
+    assert got == want
+    assert len(got) > 50  # the corpus actually exercises the gate
 
-    # r06: language_id (now Arrow-scored) must equal its HOF column twin on
-    # the same adversarial corpus — hits AND prediction, every row kept
-    from document_parser_spark.operators import text as text_ops
-
+    # r06: language_id (Arrow-scored) — hits AND prediction, every row kept
     la = sorted(tuple(r) for r in text_ops.language_id(corpus).collect())
-    lb = sorted(
-        tuple(r) for r in text_ops.language_id_column_twin(corpus).collect()
-    )
-    assert la == lb
+    assert la == sorted(run_oracle_sql("language_id", rows))
 
 
 def test_content_bucket_groups_identical_texts(spark):

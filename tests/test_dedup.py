@@ -3,11 +3,50 @@ exhaustive definition exactly; banded MinHash must find verified near-dups
 with exact integer set arithmetic."""
 
 import itertools
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
 from document_parser_spark.operators import dedup
+from tests.conftest import run_oracle_sql
+
+#: Java's ``\s`` class — ASCII only; NBSP is not a separator.
+JAVA_WS = " \t\n\x0b\f\r"
+
+
+def _java_words(text):
+    """Pure-Python word split on the Java ``\\s`` class, empty words dropped
+    (the reference for the Arrow word splitters)."""
+    out, cur = [], []
+    for ch in text or "":
+        if ch in JAVA_WS:
+            if cur:
+                out.append("".join(cur))
+                cur = []
+        else:
+            cur.append(ch)
+    if cur:
+        out.append("".join(cur))
+    return out
+
+
+def _union_find_labels(edges):
+    """Pure-Python connected components: each node in ``edges`` labelled
+    with the minimum node of its component."""
+    parent = {n: n for e in edges for n in e}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
 
 DOCS = [
     # (doc_id, lang, source, text)
@@ -71,8 +110,9 @@ def test_array_verify_equals_explode_twin(docs, ngram_n):
 
 
 def test_repetition_stats_arrow_equals_column_twin(spark):
-    """r06: the one-pass Arrow repetition stats must equal the exploded
-    two-level-aggregation twin, including 0-word/1-word/null-text edges."""
+    """r06: the one-pass Arrow repetition stats must equal the
+    ``repetition_stats`` DuckDB oracle (exploded two-level aggregation),
+    including 0-word/1-word/null-text edges."""
     from document_parser_spark.operators import text as text_ops
     from document_parser_spark.sources.session import load_table
 
@@ -80,38 +120,61 @@ def test_repetition_stats_arrow_equals_column_twin(spark):
         "doc_id", "text"
     )
     key = lambda df: sorted(tuple(r) for r in df.collect())
-    assert key(text_ops.repetition_stats(d)) == key(
-        text_ops.repetition_stats_column_twin(d)
+    got = key(text_ops.repetition_stats(d))
+    assert got == sorted(run_oracle_sql("repetition_stats", key(d)))
+    assert len(got) == 500
+    edge_rows = [(1, ""), (2, None), (3, "one"), (4, "a a b"), (5, "  x \t y\ny  x x  ")]
+    edges = spark.createDataFrame(edge_rows, "doc_id long, text string")
+    assert key(text_ops.repetition_stats(edges)) == sorted(
+        run_oracle_sql("repetition_stats", edge_rows)
     )
-    edges = spark.createDataFrame(
-        [(1, ""), (2, None), (3, "one"), (4, "a a b"), (5, "  x \t y\ny  x x  ")],
-        "doc_id long, text string",
-    )
-    assert key(text_ops.repetition_stats(edges)) == key(
-        text_ops.repetition_stats_column_twin(edges)
-    )
+
+
+def _bigram_novelty_reference(rows, common_df):
+    """Pure-Python bigram novelty: per doc with >= 2 words, (n_bigrams,
+    n_distinct, n_common, n_common_distinct) where a bigram is common when
+    >= ``common_df`` docs contain it."""
+    per_doc = {}
+    for doc_id, text in rows:
+        ws = _java_words(text)
+        if len(ws) >= 2:
+            per_doc[doc_id] = Counter(a + " " + b for a, b in zip(ws, ws[1:]))
+    dfreq = Counter(bg for counts in per_doc.values() for bg in counts)
+    common = {bg for bg, n in dfreq.items() if n >= common_df}
+    return {
+        doc_id: (
+            sum(counts.values()),
+            len(counts),
+            sum(n for bg, n in counts.items() if bg in common),
+            sum(1 for bg in counts if bg in common),
+        )
+        for doc_id, counts in per_doc.items()
+    }
 
 
 def test_bigram_novelty_arrow_equals_exploded_twin(spark):
-    """r06: the Arrow-counted (bigram, cnt) novelty pass must equal the
-    exploded-stream twin, including <2-word and null-text drop-outs."""
+    """r06: the Arrow-counted (bigram, cnt) novelty pass must equal a
+    pure-Python reference, including <2-word and null-text drop-outs."""
     from document_parser_spark.operators import text as text_ops
     from document_parser_spark.sources.session import load_table
 
     d = load_table(spark, "/root/testdata/sf0.01", "documents").select(
         "doc_id", "text"
-    )
-    key = lambda df: sorted(tuple(r) for r in df.collect())
-    assert key(text_ops.bigram_novelty(d, common_df=3)) == key(
-        text_ops.bigram_novelty_exploded_twin(d, common_df=3)
     )
     edges = spark.createDataFrame(
         [(1, ""), (2, None), (3, "one"), (4, "a b a b a"), (5, " x  y\tx y ")],
         "doc_id long, text string",
     )
-    assert key(text_ops.bigram_novelty(edges, common_df=2)) == key(
-        text_ops.bigram_novelty_exploded_twin(edges, common_df=2)
-    )
+    for df, common_df, has_common in ((d, 3, True), (edges, 2, False)):
+        got = {
+            r["doc_id"]: (r["n_bigrams"], r["n_distinct"], r["n_common"], r["n_common_distinct"])
+            for r in text_ops.bigram_novelty(df, common_df=common_df).collect()
+        }
+        want = _bigram_novelty_reference(
+            [(r["doc_id"], r["text"]) for r in df.collect()], common_df
+        )
+        assert got == want
+        assert any(v[2] for v in want.values()) == has_common
 
 
 def test_minhash_verify_array_equals_explode_twin(spark):
@@ -206,41 +269,29 @@ def test_simhash_arrow_equals_column_twin(spark):
 
 
 def test_duplicate_clusters_star_equals_propagation(spark):
-    """The large/small-star default and the min-label-propagation twin must
-    produce identical labelings on a multi-component graph with shared-node
-    merges (1-2-3 joins 3-7, star center 20, plus an isolated pair)."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (7, 3), (20, 21), (20, 22), (20, 23), (40, 41)],
-        "doc_a long, doc_b long",
-    )
+    """The large/small-star labeling must equal the pure-Python union-find
+    reference on a multi-component graph with shared-node merges (1-2-3
+    joins 3-7, star center 20, plus an isolated pair)."""
+    edges = [(1, 2), (2, 3), (7, 3), (20, 21), (20, 22), (20, 23), (40, 41)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
     star = {r["doc_id"]: r["cluster_id"] for r in dedup.duplicate_clusters(pairs).collect()}
-    prop = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup.duplicate_clusters_propagation(pairs).collect()
-    }
-    assert star == prop
+    assert star == _union_find_labels(edges)
     assert star[7] == 1 and star[23] == 20 and star[41] == 40
 
 
 def test_duplicate_clusters_deep_chain_beyond_diameter_bound(spark):
-    """A 64-node chain (diameter 63) exceeds propagation's max_iter=20
-    per-hop budget but the alternating star rounds converge in O(log n):
-    the star variant labels the whole chain with the global min while the
-    propagation twin raises its convergence guard."""
-    import pytest as _pytest
-
+    """A 64-node chain (diameter 63) would need 63 per-hop propagation
+    rounds, but the alternating star rounds converge in O(log n): the whole
+    chain is labelled with the global min."""
     chain = [(i, i + 1) for i in range(1, 64)]
     pairs = spark.createDataFrame(chain, "doc_a long, doc_b long")
     got = {r["doc_id"]: r["cluster_id"] for r in dedup.duplicate_clusters(pairs).collect()}
     assert got == {i: 1 for i in range(1, 65)}
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup.duplicate_clusters_propagation(pairs).collect()
 
 
 def test_duplicate_clusters_random_graph_vs_reference(spark):
     """Seeded random graph: star labeling must equal a pure-Python
-    union-find ground truth AND the propagation twin (diameter stays inside
-    propagation's round budget at this size)."""
+    union-find ground truth."""
     import random
 
     rng = random.Random(42)
@@ -248,29 +299,9 @@ def test_duplicate_clusters_random_graph_vs_reference(spark):
     edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(60)]
     edges = [(a, b) for a, b in edges if a != b]
 
-    parent = {n: n for n in nodes}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    in_graph = {n for e in edges for n in e}
-    truth = {n: find(n) for n in in_graph}
-
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
     star = {r["doc_id"]: r["cluster_id"] for r in dedup.duplicate_clusters(pairs).collect()}
-    prop = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup.duplicate_clusters_propagation(pairs).collect()
-    }
-    assert star == truth
-    assert prop == truth
+    assert star == _union_find_labels(edges)
 
 
 def test_pack_shards_budget_property(spark):
@@ -339,13 +370,10 @@ def test_pack_shards_two_level_equals_single_window(spark):
 
 
 def test_word_shingles_arrow_equals_column_twin(spark):
-    """The linear Arrow shingle path must equal the O(n²) Column formulation
-    byte-for-byte (incl. tabs/CRLF/unicode-ish whitespace edge docs)."""
-    from document_parser_spark.operators.text import (
-        word_shingles,
-        word_shingles_column_twin,
-    )
-    from pyspark.sql import functions as F
+    """The linear Arrow shingle path must equal a pure-Python split on the
+    Java ``\\s`` class byte-for-byte (incl. tabs/CRLF/unicode-ish whitespace
+    edge docs)."""
+    from document_parser_spark.operators.text import word_shingles
 
     rows = [
         (1, "one two three four five"),
@@ -357,9 +385,12 @@ def test_word_shingles_arrow_equals_column_twin(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r["doc_id"]: r["s"] for r in df.select("doc_id", word_shingles(F.col("text"), 3).alias("s")).collect()}
-    want = {r["doc_id"]: r["s"] for r in df.select("doc_id", word_shingles_column_twin(F.col("text"), 3).alias("s")).collect()}
+    want = {}
+    for doc_id, text in rows:
+        ws = _java_words(text)
+        want[doc_id] = [" ".join(ws[i : i + 3]) for i in range(len(ws) - 2)]
     assert got == want
-    assert got[5] == ["a b c d"][0:0] + ["a b c d"] if False else got[5] == want[5]
+    assert got[5] == ["a\u00a0b c d"]
     assert len(got[6]) == 2998
 
 
@@ -420,11 +451,10 @@ def test_minhash_incremental_equals_filtered_full(spark):
 
 
 def test_duplicate_clusters_empty_and_self_pair_edges(spark):
-    """Empty pair frames converge immediately to empty output in BOTH
-    implementations; a pure self-pair labels itself."""
+    """An empty pair frame converges immediately to empty output; a pure
+    self-pair labels itself."""
     empty = spark.createDataFrame([], "doc_a long, doc_b long")
     assert dedup.duplicate_clusters(empty).collect() == []
-    assert dedup.duplicate_clusters_propagation(empty).collect() == []
     one = spark.createDataFrame([(7, 7)], "doc_a long, doc_b long")
     got = [(r["doc_id"], r["cluster_id"]) for r in dedup.duplicate_clusters(one).collect()]
     assert got == [(7, 7)]
@@ -527,20 +557,16 @@ def test_bigram_novelty_counts(spark):
 
 def test_chunk_documents_overlap_and_twin(spark):
     """Chunk geometry (overlap, tail truncation, empty-doc drop) is exact,
-    and the Arrow pass equals the pure-Column twin across stride configs."""
-    from document_parser_spark.operators.curation import (
-        chunk_documents,
-        chunk_documents_column_twin,
-    )
+    and the Arrow pass equals a pure-Python reference across stride
+    configs."""
+    from document_parser_spark.operators.curation import chunk_documents
 
-    df = spark.createDataFrame(
-        [
-            (1, " ".join(f"w{i}" for i in range(150))),
-            (2, ""),          # zero words -> no chunks
-            (3, "a b c"),     # shorter than one window -> one chunk
-        ],
-        "doc_id long, text string",
-    )
+    rows = [
+        (1, " ".join(f"w{i}" for i in range(150))),
+        (2, ""),          # zero words -> no chunks
+        (3, "a b c"),     # shorter than one window -> one chunk
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         (r["doc_id"], r["chunk_id"]): (r["first_word"], r["n_words"], r["chunk_text"])
         for r in chunk_documents(df, max_words=64, stride=48).collect()
@@ -560,18 +586,17 @@ def test_chunk_documents_overlap_and_twin(spark):
             tuple(r) for r in chunk_documents(df, max_words=mw, stride=st).collect()
         )
         b = sorted(
-            tuple(r)
-            for r in chunk_documents_column_twin(
-                df, max_words=mw, stride=st
-            ).collect()
+            (doc_id, i, s, len(ws[s : s + mw]), " ".join(ws[s : s + mw]))
+            for doc_id, ws in ((d, _java_words(t)) for d, t in rows)
+            for i, s in enumerate(range(0, len(ws), st))
         )
         assert a == b, (mw, st)
 
 
 def test_hash_classifier_paths_agree(spark):
-    """Arrow map pass == pure-Column twin == broadcast weight-table join
-    (join path drops zero-feature docs by construction), and the score is
-    the hand-computed md5-bucket arithmetic."""
+    """Arrow map pass == broadcast weight-table join (join path drops
+    zero-feature docs by construction), and the score is the hand-computed
+    md5-bucket arithmetic."""
     import hashlib
 
     from document_parser_spark.operators import text as T
@@ -590,11 +615,6 @@ def test_hash_classifier_paths_agree(spark):
         r["doc_id"]: (r["clf_score"], r["n_feats"], r["clf_ok"])
         for r in T.hash_classifier_score(df).collect()
     }
-    twin = {
-        r["doc_id"]: (r["clf_score"], r["n_feats"], r["clf_ok"])
-        for r in T.hash_classifier_score_column_twin(df).collect()
-    }
-    assert arrow == twin
     joined = {
         r["doc_id"]: (r["clf_score"], r["n_feats"], r["clf_ok"])
         for r in T.hash_classifier_score(

@@ -8,15 +8,31 @@ from document_parser_spark.operators import extract
 
 
 def test_parse_one_captures_exceptions():
+    """A kernel exception on one document becomes that row's ``error`` value
+    and its only span (``kind='error'``) in the Arrow batch; the
+    neighbouring document parses normally."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    from document_parser_spark.schemas import PARSE_RESULT
+
+    good = extract._parse_one("| a | b |\n|---|---|\n| 1 | 2 |")
     with mock.patch.object(
-        extract, "parse_document", side_effect=ValueError("boom at offset 7")
+        extract, "parse_document_columns", side_effect=ValueError("boom at offset 7")
     ):
-        spans, tables, err = extract._parse_one("| a |\n|---|\n| 1 |")
-    assert err == "ValueError: boom at offset 7"
-    assert tables == []
-    assert spans == [
-        {"kind": "error", "text": "ValueError: boom at offset 7", "media_ref": None, "offset": 0}
-    ]
+        bad = extract._parse_one("| a |\n|---|\n| 1 |")
+    message = "ValueError: boom at offset 7"
+    error_span = {"kind": "error", "text": message, "media_ref": None, "offset": 0}
+    assert bad == ([error_span], [], message)
+
+    spans, tables, errors = extract._build_parse_arrays(
+        [good, bad],
+        to_arrow_type(PARSE_RESULT["spans"].dataType),
+        to_arrow_type(PARSE_RESULT["tables"].dataType),
+    )
+    assert errors.to_pylist() == [None, message]
+    assert spans.to_pylist()[1] == [error_span]
+    assert tables.to_pylist()[1] == []
+    assert len(tables.to_pylist()[0]) == 1  # the good row keeps its table
 
 
 def test_error_rows_counted_in_lineage(spark):

@@ -10,9 +10,12 @@ import pytest
 from document_parser_spark.presentation import format_row_results, format_search_results
 from tests.conftest import load_reference_functions
 
-REF = load_reference_functions(
-    "table_search.py", ["SearchResult", "print_search_results", "print_row_results"]
-)
+
+@pytest.fixture(scope="module")
+def ref():
+    return load_reference_functions(
+        "table_search.py", ["SearchResult", "print_search_results", "print_row_results"]
+    )
 
 
 def _capture(fn, *args, **kwargs) -> str:
@@ -67,24 +70,24 @@ _ROW_ROWS = [
 ]
 
 
-def test_search_results_byte_parity():
-    ref_results = [REF["SearchResult"](**{**r, "match_score": float(r["match_score"])})
+def test_search_results_byte_parity(ref):
+    ref_results = [ref["SearchResult"](**{**r, "match_score": float(r["match_score"])})
                    for r in _SEARCH_ROWS]
-    expected = _capture(REF["print_search_results"], ref_results)
+    expected = _capture(ref["print_search_results"], ref_results)
     assert format_search_results(_SEARCH_ROWS) == expected
 
 
-def test_search_results_truncation_parity():
+def test_search_results_truncation_parity(ref):
     rows = [_SEARCH_ROWS[0]] * 25
-    ref_results = [REF["SearchResult"](**r) for r in rows]
-    expected = _capture(REF["print_search_results"], ref_results, 20)
+    ref_results = [ref["SearchResult"](**r) for r in rows]
+    expected = _capture(ref["print_search_results"], ref_results, 20)
     got = format_search_results(rows, max_display=20)
     assert got == expected
     assert "... and 5 more results" in got
 
 
-def test_row_results_byte_parity():
-    expected = _capture(REF["print_row_results"], [dict(r) for r in _ROW_ROWS])
+def test_row_results_byte_parity(ref):
+    expected = _capture(ref["print_row_results"], [dict(r) for r in _ROW_ROWS])
     assert format_row_results(_ROW_ROWS) == expected
 
 

@@ -12,9 +12,6 @@ from document_parser_spark import kernel
 from document_parser_spark.corpus import FIXTURE_CLASSES, fixture_documents
 from tests.conftest import load_reference_functions
 
-pytestmark = pytest.mark.usefixtures("reference_available")
-
-
 @pytest.fixture(scope="module")
 def ref_umc():
     return load_reference_functions(
