@@ -1056,14 +1056,14 @@ FROM rk GROUP BY cluster_id ORDER BY cluster_id
 
 
 def _q_simhash(spark, sf_dir):
-    # Arrow fast path (zero-shuffle, per-doc fingerprint); the column twin
-    # dedup.simhash is equality-gated against it in tests/test_dedup.py
+    # one zero-shuffle Arrow pass per doc; tests/test_dedup.py checks its
+    # edge rows against the _SQL_SIMHASH oracle below
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return dedup.simhash_arrow(d)
 
 
-# 60-bit mirror of operators/dedup.py simhash: 15 md5 hex chars → signed-safe
-# BIGINT word hash, one ± sum per bit.
+# 60-bit mirror of operators/dedup.py simhash_arrow: 15 md5 hex chars →
+# signed-safe BIGINT word hash, one ± sum per bit.
 _SQL_SIMHASH = rf"""
 WITH w AS (SELECT doc_id, {_SQL_WORDS} AS ws FROM documents),
 wc AS (SELECT doc_id, u.w, count(*) AS cnt FROM w, unnest(ws) AS u(w) GROUP BY doc_id, u.w),

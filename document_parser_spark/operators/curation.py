@@ -278,7 +278,6 @@ def repeated_ngram_spans(
     text_col: str = "text",
     window_k: int = 10,
     min_docs: int = 2,
-    persist_windows: bool = False,
 ) -> DataFrame:
     """Corpus-internal verbatim-passage detection (the exact-substring dedup
     germ, Lee et al. "Deduplicating Training Data Makes Language Models
@@ -290,16 +289,12 @@ def repeated_ngram_spans(
 
     Scale shape: shingle explode → groupBy(window-md5) distinct-doc count
     (map-side combined) → equi join back on the hash — no pair join, no
-    cross product.  The window frame feeds BOTH the count and the join
-    side, so without caching the explode subtree runs twice; measured at
-    sf0.1 the re-derivation is a wash warm (1.6 s both ways — same verdict
-    as the ngram `persist_words` A/B), so ``persist_windows`` is opt-in for
-    corpus-scale runs where re-reading the text twice is real money.  The
-    join side's physical strategy is left to AQE: broadcast when the
-    repeated-hash set is small, shuffle hash join when a viral corpus makes
-    it huge.  md5 window hashing keeps the DuckDB oracle exact."""
-    from pyspark import StorageLevel
-
+    cross product.  The window array feeds BOTH the count and the join
+    side, so the shingle pass runs twice; caching the position stream was
+    measured a wash warm at sf0.1 (1.6 s both ways — the same verdict as the
+    ngram tokens' persist A/B), so it is re-derived.  The join side's
+    physical strategy is left to AQE: broadcast when the repeated-hash set
+    is small, shuffle hash join when a viral corpus makes it huge.  md5 window hashing keeps the DuckDB oracle exact."""
     from .text import word_shingles
 
     # r06: hash the window stream ONCE per doc into an array column; the
@@ -320,8 +315,6 @@ def repeated_ngram_spans(
         (F.col("pos0") + 1).cast("long").alias("pos"),
         "window_md5",
     )
-    if persist_windows:
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
     rep = (
         warr.select("doc_id", F.explode(F.array_distinct("warr")).alias("window_md5"))
         .groupBy("window_md5")

@@ -19,7 +19,7 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .text import word_shingles, words
@@ -132,72 +132,56 @@ def minhash_candidate_pairs(signatures: DataFrame) -> DataFrame:
 def _verify_jaccard(
     cand: DataFrame,
     docs: DataFrame,
-    text_col: str,
-    shingle_k: int,
+    tokens: Column,
     threshold_pct: int,
-    verify: str = "array",
 ) -> DataFrame:
-    """Exact shingle-set Jaccard over candidate pairs only:
-    ``100·|A∩B| ≥ t·|A∪B|`` in integer arithmetic.  ``docs`` only needs the
-    documents that can appear in ``cand`` — callers doing incremental work
-    semi-join it down first so the shingle explode never re-reads the
-    whole corpus.
+    """Exact token-set Jaccard over candidate pairs only — the one verify
+    behind minhash (word shingles) and ngram_jaccard (words or word
+    n-grams): keeps ``100·|A∩B| ≥ t·|A∪B|`` in integer arithmetic and
+    returns (doc_a, doc_b, n_inter, n_union).  ``tokens`` is a per-row token
+    array over ``docs``, which only needs the documents that can appear in
+    ``cand`` — callers doing incremental work semi-join it down first.
 
-    ``verify="array"`` (r06, same rewrite as ngram_jaccard_pairs): the
-    intersection is a codegen ``array_intersect`` over one-row-per-doc
-    distinct-shingle arrays joined to the candidate pairs (AQE broadcasts
-    the doc table when it fits, so candidates are not shuffled for the
-    verify), with the threshold rewritten to reference the intersect once:
-    100·I ≥ t·(na+nb−I) ⟺ (100+t)·I ≥ t·(na+nb).  ``verify="explode"``
-    keeps the exploded candidate×shingle join + groupBy as the
-    cross-checking twin (equality test in tests/test_dedup.py)."""
-    if verify == "array":
-        toks = docs.select(
-            "doc_id",
-            F.array_distinct(word_shingles(F.col(text_col), shingle_k)).alias("sh"),
-        ).withColumn("n_sh", F.size("sh").cast("long"))
-        ta = toks.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("sh").alias("sh_a"),
-            F.col("n_sh").alias("n_a"),
-        )
-        tb = toks.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("sh").alias("sh_b"),
-            F.col("n_sh").alias("n_b"),
-        )
-        return (
-            cand.join(ta, "doc_a")
-            .join(tb, "doc_b")
-            .withColumn(
-                "n_inter", F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
-            )
-            .filter(
-                F.lit(100 + threshold_pct) * F.col("n_inter")
-                >= F.lit(threshold_pct) * (F.col("n_a") + F.col("n_b"))
-            )
-            .withColumn("n_union", F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-            .select("doc_a", "doc_b", "n_inter", "n_union")
-        )
-    if verify != "explode":
-        raise ValueError(f"unknown verify {verify!r}; 'array' or 'explode'")
-    dsh = _doc_shingles(docs, text_col, shingle_k).distinct()
-    sizes = dsh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    a = dsh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = dsh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        cand.join(a, "doc_a")
-        .join(b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
+    One row per doc carries its DISTINCT token set as an array; |A∩B| is a
+    codegen ``array_intersect`` on the joined pair row.  This replaced the
+    exploded candidate×token join + groupBy (the explode multiplied every
+    candidate by ~|doc| tokens: ~3·10⁸ shuffled rows at the 50k-doc tier,
+    35-50 s of the ngram query) with two joins against the 1-row-per-doc
+    token table — small enough that AQE broadcasts it, so the candidate
+    frame is never shuffled for the verify at all.  n_a/n_b come from the
+    same arrays."""
+    toks = docs.select(
+        "doc_id", F.array_distinct(tokens).alias("ws")
+    ).withColumn("n_words", F.size("ws").cast("long"))
+    ta = toks.select(
+        F.col("doc_id").alias("doc_a"),
+        F.col("ws").alias("ws_a"),
+        F.col("n_words").alias("n_a"),
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
+    tb = toks.select(
+        F.col("doc_id").alias("doc_b"),
+        F.col("ws").alias("ws_b"),
+        F.col("n_words").alias("n_b"),
+    )
+    # Filter rewritten to reference the (interpreted, per-row-HashSet)
+    # intersect ONCE: 100·I ≥ t·(na+nb−I) ⟺ (100+t)·I ≥ t·(na+nb), all
+    # int64-exact — predicate pushdown substitutes the alias into the
+    # filter, so every extra reference re-evaluates array_intersect.
+    # No terminal orderBy: the contract check sorts rows before hashing,
+    # and a range sort here SAMPLES its child — re-executing the
+    # whole verify subtree a second time (measured 2.1× on the 50k-doc
+    # tier, OPTIMIZATION_r06.md).
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        cand.join(ta, "doc_a")
+        .join(tb, "doc_b")
+        .withColumn(
+            "n_inter", F.size(F.array_intersect("ws_a", "ws_b")).cast("long")
+        )
+        .filter(
+            F.lit(100 + threshold_pct) * F.col("n_inter")
+            >= F.lit(threshold_pct) * (F.col("n_a") + F.col("n_b"))
+        )
         .withColumn("n_union", F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-        .filter(F.lit(100) * F.col("n_inter") >= F.lit(threshold_pct) * F.col("n_union"))
         .select("doc_a", "doc_b", "n_inter", "n_union")
     )
 
@@ -216,7 +200,9 @@ def minhash_near_dup_pairs(
     cand = minhash_candidate_pairs(
         minhash_signatures(df, text_col, num_hashes, rows_per_band, shingle_k)
     )
-    return _verify_jaccard(cand, df, text_col, shingle_k, threshold_pct)
+    return _verify_jaccard(
+        cand, df, word_shingles(F.col(text_col), shingle_k), threshold_pct
+    )
 
 
 def minhash_incremental_pairs(
@@ -305,7 +291,9 @@ def minhash_pairs_from_signatures(
         .distinct()
     )
     touched = texts.select("doc_id", text_col).join(cand_ids, "doc_id", "left_semi")
-    return _verify_jaccard(cand, touched, text_col, shingle_k, threshold_pct)
+    return _verify_jaccard(
+        cand, touched, word_shingles(F.col(text_col), shingle_k), threshold_pct
+    )
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -475,27 +463,25 @@ def canonical_keep(
     )
 
 
-def _word_hash60(word: Column) -> Column:
-    """First 60 bits of md5 as a long — same in DuckDB via
-    ``('0x' || substr(md5(w),1,15))::BIGINT``."""
-    return F.conv(F.substring(F.md5(word), 1, 15), 16, 10).cast("long")
-
-
 _SIMHASH_UDF = None
 
 
 def simhash_arrow(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Arrow-batched simhash twin: the whole fingerprint is a per-document
-    computation, so ONE map-only pandas_udf pass (zero shuffles) replaces the
-    column path's explode → groupBy(doc,word) → 60-column aggregate (two
-    shuffles).  Word hashes are md5-prefix int64s cached across each batch's
-    shared vocabulary; the bit math is the same branch-free
-    2·sum(cnt·bit) > sum(cnt) as ``simhash``.  Measured at sf0.1×32 cores:
-    0.58 s vs 1.55 s, fingerprints byte-identical corpus-wide
-    (tests/test_dedup.py asserts equality incl. empty/whitespace-only docs).
-    Docs with no words are dropped — exactly the column path, whose explode
-    emits no row for them (the UDF signals them with -1, below any real
-    60-bit fingerprint)."""
+    """(doc_id, simhash) — frequency-weighted 60-bit SimHash over word
+    hashes: bit i of the fingerprint is 1 iff the ±1 sum over the doc's
+    distinct words, each weighted by its count, is positive at bit i —
+    written branch-free as 2·sum(cnt·bit) > sum(cnt).  Word hashes are the
+    first 15 md5 hex chars as an int64, so everything is integer arithmetic
+    → exact SQL oracle (``_SQL_SIMHASH`` in __spark_entry__.py).
+
+    The whole fingerprint is a per-document computation, so it is ONE
+    map-only pandas_udf pass (zero shuffles) instead of an explode →
+    groupBy(doc,word) → 60-column aggregate (two shuffles; measured at
+    sf0.1×32 cores: 0.58 s vs 1.55 s).  Word hashes are cached across each
+    batch's shared vocabulary.  Docs with no words are dropped, as the
+    oracle's unnest drops them (the UDF signals them with -1, below any
+    real 60-bit fingerprint); tests/test_dedup.py checks empty and
+    whitespace-only docs against the oracle."""
     global _SIMHASH_UDF
     if _SIMHASH_UDF is None:
         import hashlib
@@ -535,42 +521,6 @@ def simhash_arrow(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.select(
         "doc_id", _SIMHASH_UDF(F.col(text_col)).alias("simhash")
     ).filter(F.col("simhash") >= 0)
-
-
-def simhash(df: DataFrame, text_col: str = "text", bits: int = SIMHASH_BITS) -> DataFrame:
-    """Frequency-weighted SimHash over word hashes: bit i of the fingerprint
-    is 1 iff the count-weighted ±1 sum over words at bit i is positive.
-    Everything is integer arithmetic → exact SQL oracle.
-
-    Plan shape: the per-bit sums are ``bits`` aggregate COLUMNS in one
-    groupBy(doc_id) — all partial-aggregated map-side — instead of a
-    bits× row explode + two shuffles (the round-1 shape; a 16× row blow-up
-    on the (doc, word) stream is real money at corpus scale).  The ±1 sum is
-    branch-free: sum(±cnt) > 0  ⟺  2·sum(cnt·bit) > sum(cnt), so each
-    aggregate is a multiply instead of a CASE (measured 2.6 s → 1.8 s at
-    sf0.1×60 bits; fingerprints byte-identical)."""
-    word_counts = (
-        df.select("doc_id", F.explode(words(F.col(text_col))).alias("w"))
-        .groupBy("doc_id", "w")
-        .agg(F.count("*").alias("cnt"))
-        .withColumn("h", _word_hash60(F.col("w")))
-    )
-    bit_sums = word_counts.groupBy("doc_id").agg(
-        *[
-            F.sum(F.col("cnt") * F.expr(f"shiftright(h, {b}) & 1")).alias(f"s{b}")
-            for b in range(bits)
-        ],
-        F.sum("cnt").alias("tot"),
-    )
-    fingerprint = None
-    for b in range(bits):
-        term = F.when(
-            2 * F.col(f"s{b}") > F.col("tot"), F.lit(1 << b).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        fingerprint = term if fingerprint is None else fingerprint + term
-    # NO terminal sort here: simhash feeds the near-pair chunk join — callers
-    # that need ordered output sort at their own terminal
-    return bit_sums.select("doc_id", fingerprint.alias("simhash"))
 
 
 def simhash_candidate_pairs(
@@ -638,22 +588,24 @@ def simhash_near_pairs(sim: DataFrame, max_hamming: int = 2, bits: int = SIMHASH
     )
 
 
-def _ngram_frames(
+def _ngram_tokens(text: Column, ngram_n: int) -> Column:
+    """The ngram-Jaccard token array: words (``ngram_n`` ≤ 1) or word
+    n-grams."""
+    return words(text) if ngram_n <= 1 else word_shingles(text, ngram_n)
+
+
+def ngram_candidate_pairs(
     df: DataFrame,
-    text_col: str,
-    block_cols: tuple,
-    threshold_pct: int,
-    persist_words: bool,
-    ngram_n: int,
-):
-    """Shared candidate machinery for the ngram-Jaccard family: returns
-    (dw, sizes, cand) where dw is the distinct (doc, token) frame and cand
-    the prefix-filtered candidate pairs.  See ngram_jaccard_pairs."""
-    tok = (
-        words(F.col(text_col))
-        if ngram_n <= 1
-        else word_shingles(F.col(text_col), ngram_n)
-    )
+    text_col: str = "text",
+    block_cols: tuple = ("lang", "source"),
+    threshold_pct: int = 80,
+    ngram_n: int = 1,
+) -> DataFrame:
+    """The prefix-filtered (doc_a, doc_b) candidate pairs
+    ``ngram_jaccard_pairs`` verifies (see its docstring for the filters) —
+    public so growth studies can measure candidate volume from the executed
+    join instead of inferring it."""
+    tok = _ngram_tokens(F.col(text_col), ngram_n)
     # One row per doc with its DISTINCT token array (map-only); the exploded
     # distinct frame falls out of it without a dedup shuffle.  r06: the old
     # formulation derived explode+distinct THREE times (dw, dfreq(dw),
@@ -661,13 +613,6 @@ def _ngram_frames(
     # the candidate stage at the 50k-doc tier was those re-derivations.
     toks = df.select("doc_id", *block_cols, F.array_distinct(tok).alias("ws"))
     dw = toks.select("doc_id", *block_cols, F.explode("ws").alias("w"))
-    if persist_words:
-        from pyspark import StorageLevel
-
-        dw = dw.persist(StorageLevel.MEMORY_AND_DISK)
-    sizes = toks.select("doc_id", F.size("ws").cast("long").alias("n_words")).filter(
-        F.col("n_words") > 0
-    )
 
     # Prefix selection: global (per-block) df order, rarest first.  Instead
     # of a per-doc row_number window over the (token ⋈ dfreq) frame, ONE
@@ -732,7 +677,7 @@ def _ngram_frames(
     #     prefix intersection admits (measured: the 20k-doc zipf corpus fell
     #     696 s → see BASELINE.md r04 growth rows).
     t = threshold_pct
-    cand = (
+    return (
         pa.join(pb, on="wid", how="inner")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .filter(
@@ -747,21 +692,6 @@ def _ngram_frames(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    return dw, sizes, cand
-
-
-def ngram_candidate_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    block_cols: tuple = ("lang", "source"),
-    threshold_pct: int = 80,
-    ngram_n: int = 1,
-) -> DataFrame:
-    """The (doc_a, doc_b) candidate frame ngram_jaccard_pairs verifies —
-    exposed so growth studies can measure candidate volume from the
-    executed join instead of inferring it."""
-    _, _, cand = _ngram_frames(df, text_col, block_cols, threshold_pct, False, ngram_n)
-    return cand
 
 
 def ngram_jaccard_pairs(
@@ -769,9 +699,7 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     block_cols: tuple = ("lang", "source"),
     threshold_pct: int = 80,
-    persist_words: bool = False,
     ngram_n: int = 1,
-    verify: str = "array",
 ) -> DataFrame:
     """Blocked n-gram Jaccard with PREFIX + LENGTH + POSITIONAL filtering:
     results are EXACTLY the pairs with ``100·|A∩B| ≥ t·|A∪B|`` (integer
@@ -796,102 +724,28 @@ def ngram_jaccard_pairs(
     the exhaustive join has at corpus scale; the exact-Jaccard verify then
     touches candidate pairs only.
 
-    The distinct (doc, word) frame feeds FOUR consumers (sizes, dfreq, both
-    verify sides).  ``persist_words`` caches it for the query's lifetime —
-    MEASURED tradeoff (sf0.1, local[32], steady-state): persisting costs
-    7.5-8.4 s vs 4.5-5.1 s re-deriving, because the exploded frame is LARGER
-    than the source parquet and its materialization is a barrier, while the
-    re-derivations run as parallel cheap scans.  So the default is False at
-    job scale; at corpus scale (where re-reading 100 TB ×4 dominates) set it
-    True — or better, write the tokenized frame once per curation run and
-    feed it to every dedup operator.
+    The distinct (doc, token) frame feeds both the df count and the prefix
+    ranking; it is re-derived, not cached.  Persisting it was MEASURED to
+    lose (sf0.1, local[32], steady-state: 7.5-8.4 s vs 4.5-5.1 s
+    re-deriving), because the exploded frame is LARGER than the source
+    parquet and its materialization is a barrier, while the re-derivations
+    run as parallel cheap scans.  At corpus scale, write the tokenized frame
+    once per curation run and feed it to every dedup operator instead.
 
-    Oversize-doc note: the prefix-rank window partitions by doc_id over the
-    doc's DISTINCT tokens, so a pathological 100 MB document puts its ~10⁶
+    The verify is the shared ``_verify_jaccard`` (array_intersect over one
+    distinct-token array per doc).
+
+    Oversize-doc note: the prefix ranking groups by doc_id over the doc's
+    DISTINCT tokens, so a pathological 100 MB document puts its ~10⁶
     distinct tokens (narrow rows) in one task — heavy but bounded by ONE
     doc's vocabulary, never by corpus skew.  Pipelines that admit giant
     docs should length-gate them upstream (the curation gate) or segment
     them first (plans/segmentation.py); a book-length doc is not a sane
     near-dup unit anyway."""
-    dw, sizes, cand = _ngram_frames(
-        df, text_col, block_cols, threshold_pct, persist_words, ngram_n
+    cand = ngram_candidate_pairs(df, text_col, block_cols, threshold_pct, ngram_n)
+    return _verify_jaccard(
+        cand, df, _ngram_tokens(F.col(text_col), ngram_n), threshold_pct
     )
-
-    if verify == "array":
-        # r06 verify: one row per doc carrying its DISTINCT token set as an
-        # array; |A∩B| is a codegen ``array_intersect`` on the joined pair
-        # row.  Replaces the exploded candidate×token join + groupBy (the
-        # explode multiplied every candidate by ~|doc| tokens: ~3·10⁸
-        # shuffled rows at the 50k-doc tier, 35-50 s of the query) with two
-        # joins against the 1-row-per-doc token table — small enough that
-        # AQE broadcasts it, so the candidate frame is never shuffled for
-        # the verify at all.  Counts are identical by construction (both
-        # count the same distinct-token intersection); equality-gated
-        # against the explode twin in tests/test_dedup.py.  n_a/n_b come
-        # from the SAME arrays, which also drops the two ``sizes`` joins.
-        tok = (
-            words(F.col(text_col))
-            if ngram_n <= 1
-            else word_shingles(F.col(text_col), ngram_n)
-        )
-        toks = df.select(
-            "doc_id", F.array_distinct(tok).alias("ws")
-        ).withColumn("n_words", F.size("ws").cast("long"))
-        ta = toks.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("ws").alias("ws_a"),
-            F.col("n_words").alias("n_a"),
-        )
-        tb = toks.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("ws").alias("ws_b"),
-            F.col("n_words").alias("n_b"),
-        )
-        # Filter rewritten to reference the (interpreted, per-row-HashSet)
-        # intersect ONCE: 100·I ≥ t·(na+nb−I) ⟺ (100+t)·I ≥ t·(na+nb), all
-        # int64-exact — predicate pushdown substitutes the alias into the
-        # filter, so every extra reference re-evaluates array_intersect.
-        # No terminal orderBy: the driver canonicalizes (rows sorted) before
-        # hashing, and a range sort here SAMPLES its child — re-executing
-        # the whole verify subtree a second time (guide §2.4; measured 2.1×
-        # on the 50k-doc tier, OPTIMIZATION_r06.md).
-        out = (
-            cand.join(ta, "doc_a")
-            .join(tb, "doc_b")
-            .withColumn(
-                "n_inter", F.size(F.array_intersect("ws_a", "ws_b")).cast("long")
-            )
-            .filter(
-                F.lit(100 + threshold_pct) * F.col("n_inter")
-                >= F.lit(threshold_pct) * (F.col("n_a") + F.col("n_b"))
-            )
-            .withColumn("n_union", F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-        )
-        return out.select("doc_a", "doc_b", "n_inter", "n_union")
-    if verify != "explode":
-        raise ValueError(f"unknown verify {verify!r}; 'array' or 'explode'")
-
-    # Exact verify over candidates only (block equality already implied) —
-    # the pre-r06 explode twin, kept for cross-checking.
-    a = dw.select(F.col("doc_id").alias("doc_a"), "w")
-    b = dw.select(F.col("doc_id").alias("doc_b"), "w")
-    inter = (
-        cand.join(a, "doc_a")
-        .join(b, ["doc_b", "w"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_words").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_words").alias("n_b"))
-    # No broadcast hint: sizes is one row per doc (not broadcastable at
-    # corpus scale); AQE upgrades the join to broadcast when it IS small.
-    out = (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("n_union", F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-        .filter(F.lit(100) * F.col("n_inter") >= F.lit(threshold_pct) * F.col("n_union"))
-    )
-    return out.select("doc_a", "doc_b", "n_inter", "n_union").orderBy("doc_a", "doc_b")
 
 
 def containment_pairs(

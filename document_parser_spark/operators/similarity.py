@@ -22,7 +22,8 @@ Paths:
     LSH 0.78 at similar fractions).  At rest the 64 B sketch column is the
     only thing the full-corpus pass reads.
   * ``cosine_near_dup_pairs``  — embedding near-dup for the dedup family:
-    banded-LSH candidates + exact integer cosine threshold.  Never all-pairs.
+    sketch-hamming candidates + exact integer cosine threshold, both inside
+    one cogrouped Arrow pass over block-pair groups.
 
   * ``ivf_sketch_topk``        — the IVF→sketch→exact composition for
     corpora that actually cluster: probe nprobe/nlist of the corpus,
@@ -242,31 +243,6 @@ def probe_dim(df: DataFrame, vec_col: str = "embedding") -> int:
     return int(row.hi)
 
 
-def _band_buckets_col(
-    vec: Column, dim: int, bands: int = BANDS, rows_per_band: int = ROWS_PER_BAND
-) -> Column:
-    """array<struct<band:int, bucket:long>> — one bucket id per band.
-    Projection p = Σᵢ floor(vecᵢ·1e8)·signs(p)ᵢ is exact int64; bucket bit j
-    of band b is (projection(b·r+j) > 0)."""
-    def proj(p: int) -> Column:
-        signs = F.array(*[F.lit(s) for s in plane_signs(p, dim)])
-        return F.aggregate(
-            F.zip_with(vec, signs, lambda x, s: _int_val(x) * s.cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
-    structs = []
-    for b in range(bands):
-        bucket = F.lit(0).cast("long")
-        for j in range(rows_per_band):
-            bucket = bucket + F.when(
-                proj(b * rows_per_band + j) > 0, F.lit(1 << j).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-        structs.append(F.struct(F.lit(b).alias("band"), bucket.alias("bucket")))
-    return F.array(*structs)
-
-
 def _band_buckets_udf(dim: int, bands: int, rows_per_band: int):
     """Arrow-batched bucket computation: ONE int64 matmul per batch instead
     of bands·rows_per_band interpreted per-element lambdas per row (the
@@ -274,8 +250,7 @@ def _band_buckets_udf(dim: int, bands: int, rows_per_band: int):
 
     Exactness is preserved: np.floor(float64(v)·1e8)→int64 matches Spark's
     floor(double)·cast(long) bit-for-bit, and integer matmul is
-    order-independent — so buckets equal ``_band_buckets_col`` and the
-    DuckDB mirror exactly."""
+    order-independent — so buckets equal the DuckDB mirror exactly."""
     planes = bands * rows_per_band
     signs = np.array(
         [plane_signs(p, dim) for p in range(planes)], dtype=np.int64
@@ -303,9 +278,9 @@ def lsh_band_buckets(
     bands: int = BANDS,
     rows_per_band: int = ROWS_PER_BAND,
 ) -> DataFrame:
-    """(id, band, bucket) — exploded band buckets, ready for the bucket join.
-    Buckets come from the Arrow/numpy path; ``_band_buckets_col`` is the
-    pure-Column twin kept for cross-checking (tests assert equality)."""
+    """(id, band, bucket) — exploded band buckets from the Arrow/numpy
+    path, ready for the bucket join (tests check them against a pure-Python
+    ``plane_signs`` projection)."""
     udf = _band_buckets_udf(dim, bands, rows_per_band)
     return df.select(
         F.col(id_col).alias("id"),
@@ -916,26 +891,6 @@ def sketch_near_dup_max_hamming(
     return int(planes * (f + 0.5) / 2)
 
 
-def _verify_pairs_exact(
-    cand: DataFrame,
-    embeddings: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Shared near-dup tail: fetch float vectors for CANDIDATE rows only,
-    exact integer-cosine score, keep pairs ≥ threshold."""
-    va = embeddings.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"))
-    vb = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", cosine_exact_arrow(F.col("vec_a"), F.col("vec_b")).alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
-        .orderBy("id_a", "id_b")
-    )
-
-
 def near_dup_blocks(parallelism: int) -> int:
     """Block count for the cogrouped pair pass: the smallest B whose
     B(B+1)/2 equal-sized block-pair groups are ≥ 8× the session parallelism,
@@ -950,39 +905,48 @@ def near_dup_blocks(parallelism: int) -> int:
     return b
 
 
-def _near_dup_pairs_grouped_arrow(
+def cosine_near_dup_pairs(
     embeddings: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    blocks: int | None,
-    planes: int,
-    max_hamming: int,
+    threshold: float = 0.45,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    blocks: int | None = None,
+    planes: int = SKETCH_PLANES,
+    max_hamming: int | None = None,
 ) -> DataFrame:
-    """Block-pair near-dup in ONE cogrouped Arrow pass (guide §4.2/§8): the
-    shuffle moves each (id, vec) row B times (~0.5 KB·n·B total) and ALL
-    pair work — sketching, the n²/2 hamming evaluations, the exact integer
-    cosine verify — happens in numpy inside ``applyInPandas``, so no pair
-    row is ever materialized in the JVM and no candidate pair ever crosses
-    the Python boundary (the r05 join twin materialized every pair in the
+    """Embedding-cosine near-duplicate pairs (id_a < id_b, cos_sim): pairs
+    whose 512-bit sign-sketch hamming distance is ≤ ``max_hamming`` (derived
+    from the cosine threshold by ``sketch_near_dup_max_hamming`` unless
+    given) and whose exact integer cosine is ≥ ``threshold``.
+
+    Block-pair near-dup in ONE cogrouped Arrow pass: the shuffle moves each
+    (id, vec) row B times (~0.5 KB·n·B total) and ALL pair work —
+    sketching, the n²/2 hamming evaluations, the exact integer cosine
+    verify — happens in numpy inside ``applyInPandas``, so no pair row is
+    ever materialized in the JVM and no candidate pair ever crosses the
+    Python boundary (the r05 block-pair join materialized every pair in the
     SMJ and shipped ~5% of n²/2 candidate rows with BOTH float vectors
     through Arrow for the verify — measured 74.7 s at n=20k vs 4-6 s for
     this pass, OPTIMIZATION_r06.md).
 
     Hamming via GEMM: h(a,b) = |a| + |b| − 2·(bits_a · bits_b) with the
     512 sketch bits unpacked to float32 — dot products ≤ 512 are exact in
-    float32, so the cutoff comparison is integer-exact, identical to the
-    XOR+POPCNT twin (equality-gated in tests/test_similarity.py).  The
-    exact verify reuses the ``cosine_exact_arrow`` arithmetic verbatim:
-    int64 floor-scaled dot/norms, one IEEE double divide.
+    float32, so the cutoff comparison is integer-exact.  The exact verify
+    reuses the ``cosine_exact_arrow`` arithmetic verbatim: int64
+    floor-scaled dot/norms, one IEEE double divide (tests/test_similarity.py
+    checks ids and cos_sim against a numpy all-pairs reference).
 
     Each row lands in block ``xxhash64(id) % B``; the lo side is replicated
     to block-pairs (b, b..B-1), the hi side to (0..b, b) — every unordered
-    pair meets in exactly one group (same enumeration as the join twin).
-    An explicit ``repartition(n, pk)`` pins the exchange width: without it
-    AQE coalesces the small-byte/huge-compute shuffle to ~2 partitions
-    (64 MB advisory) and the pair pass runs nearly serial — the single
-    biggest contributor to the r05 sf1 regression."""
+    pair meets in exactly one group (the enumeration
+    ``sketch_near_dup_candidates`` joins on).  ``blocks=None`` derives B
+    from the session parallelism (``near_dup_blocks``).  An explicit
+    ``repartition(n, pk)`` pins the exchange width: without it AQE
+    coalesces the small-byte/huge-compute shuffle to ~2 partitions (64 MB
+    advisory) and the pair pass runs nearly serial — the single biggest
+    contributor to the r05 sf1 regression."""
+    if max_hamming is None:
+        max_hamming = sketch_near_dup_max_hamming(threshold, planes)
     spark = embeddings.sparkSession
     par = spark.sparkContext.defaultParallelism
     if blocks is None:
@@ -1098,70 +1062,6 @@ def _near_dup_pairs_grouped_arrow(
     )
 
 
-def cosine_near_dup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.45,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    method: str = "sketch",
-    blocks: int | None = None,
-    planes: int = SKETCH_PLANES,
-    max_hamming: int | None = None,
-    bands: int = BANDS,
-    rows_per_band: int = ROWS_PER_BAND,
-    impl: str = "arrow",
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: sketch-hamming candidates
-    (default) or banded-LSH candidates, exact integer cosine verify.
-
-    ``method="sketch"`` (VERDICT r04 item 4): candidates are pairs whose
-    512-bit sign-sketch hamming distance ≤ ``max_hamming`` (derived from the
-    cosine threshold by ``sketch_near_dup_max_hamming`` unless given).
-    ``impl`` picks the execution of the SAME pair definition:
-
-      * ``"arrow"`` (default, r06): one cogrouped numpy pass over block-pair
-        groups — sketching, hamming (GEMM) and the exact verify all happen
-        in-place; no pair row is materialized JVM-side and no candidate
-        crosses the Python boundary.  See ``_near_dup_pairs_grouped_arrow``.
-        ``blocks=None`` derives the block count from the session parallelism
-        (``near_dup_blocks``).
-      * ``"join"`` — the r05 twin kept for cross-checking: BLOCK-PAIR
-        equi-join in whole-stage codegen (n·B sketch rows of ~72 B through
-        the shuffle, n²/2 XOR+POPCNT ops over B(B+1)/2 join groups), then
-        float vectors re-joined for candidates only.  Equality-gated to the
-        arrow path in tests/test_similarity.py.
-
-    ``method="lsh"`` keeps the banded-LSH candidate generator as a second
-    cross-checking twin (b=8/r=4 → ~40% candidate fraction on isotropic
-    data; candidates bounded by bucket population per band)."""
-    if method == "lsh":
-        dim = probe_dim(embeddings, vec_col)
-        bb = lsh_band_buckets(embeddings, dim, id_col, vec_col, bands, rows_per_band)
-        a = bb.select(F.col("id").alias("id_a"), "band", "bucket")
-        b = bb.select(F.col("id").alias("id_b"), "band", "bucket")
-        cand = (
-            a.join(b, on=["band", "bucket"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        return _verify_pairs_exact(cand, embeddings, threshold, id_col, vec_col)
-    if method != "sketch":
-        raise ValueError(f"unknown near-dup method {method!r}; 'sketch' or 'lsh'")
-    if max_hamming is None:
-        max_hamming = sketch_near_dup_max_hamming(threshold, planes)
-    if impl == "arrow":
-        return _near_dup_pairs_grouped_arrow(
-            embeddings, threshold, id_col, vec_col, blocks, planes, max_hamming
-        )
-    if impl != "join":
-        raise ValueError(f"unknown near-dup impl {impl!r}; 'arrow' or 'join'")
-    cand = sketch_near_dup_candidates(
-        embeddings, threshold, id_col, vec_col, blocks or 8, planes, max_hamming
-    )
-    return _verify_pairs_exact(cand, embeddings, threshold, id_col, vec_col)
-
-
 def sketch_near_dup_candidates(
     embeddings: DataFrame,
     threshold: float = 0.45,
@@ -1172,8 +1072,10 @@ def sketch_near_dup_candidates(
     max_hamming: int | None = None,
 ) -> DataFrame:
     """The sketch-hamming candidate pairs (id_a, id_b) that
-    ``cosine_near_dup_pairs`` exactly verifies — public so the growth study
-    can count the verify bill from the executed join."""
+    ``cosine_near_dup_pairs`` exactly verifies, as a block-pair equi-join in
+    whole-stage codegen (XOR+POPCNT per pair).  The near-dup operator keeps
+    its candidates inside the cogrouped pass; this frame exists so bench.py's
+    growth study can count the verify bill from an executed join."""
     if max_hamming is None:
         max_hamming = sketch_near_dup_max_hamming(threshold, planes)
     dim = probe_dim(embeddings, vec_col)

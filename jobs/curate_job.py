@@ -38,13 +38,6 @@ def main() -> None:
         help="arm the classifier gate (keep iff score >= CLF_MIN); needs "
         "trained weights to be meaningful — see plans/curate.py",
     )
-    parser.add_argument(
-        "--election-method", choices=("groupby", "window"), default="groupby",
-        help="canonical election shape: 'groupby' (default; map-side-"
-        "combined aggregate — skew-proof under viral duplicate groups) or "
-        "'window' (one-shuffle twin; only for corpora with known-bounded "
-        "duplicate-group sizes — see the skew A/B in BASELINE.md)",
-    )
     args = parser.parse_args()
 
     from pyspark.sql import SparkSession
@@ -97,7 +90,6 @@ def main() -> None:
         max_words=args.max_words,
         stride=args.stride,
         clf_min=args.clf_min,
-        election_method=args.election_method,
     )
     print(json.dumps(stats))
     spark.stop()

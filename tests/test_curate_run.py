@@ -2,6 +2,8 @@
 canonical election, map-only gate, chunk output, closed-form metrics, and
 bucket-level crash-resume."""
 
+import hashlib
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -36,10 +38,29 @@ def _corpus(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _election_reference(rows):
+    """Pure-Python md5-group election over (doc_id, text, bucket) rows:
+    canonical (min doc_id, text, bucket, copies) per md5 group and the
+    per-bucket census (bucket, docs_in, docs_canonical)."""
+    groups = {}
+    for doc_id, text, bucket in rows:
+        groups.setdefault(hashlib.md5(text.encode()).hexdigest(), []).append(
+            (doc_id, text, bucket)
+        )
+    canonical = sorted(
+        (min(d for d, _, _ in g), g[0][1], g[0][2], len(g)) for g in groups.values()
+    )
+    census = {}
+    for _, _, bucket, copies in canonical:
+        n_in, n_canon = census.get(bucket, (0, 0))
+        census[bucket] = (n_in + copies, n_canon + 1)
+    return canonical, sorted((b, n_in, n_canon) for b, (n_in, n_canon) in census.items())
+
+
 def test_election_methods_agree(spark):
-    """The skew-proof groupBy+join election (default) and the one-shuffle
-    window twin elect IDENTICAL (canonical rows, copy counts, census) — on
-    the handcrafted corpus and on a synthetic one with a planted viral
+    """The skew-proof aggregate election must equal a pure-Python md5-group
+    reference (min doc_id, copy count, per-bucket census, for both census
+    shapes) — on the handcrafted corpus and on one with a planted viral
     duplicate group (one text × 37 copies)."""
     from document_parser_spark.plans.curate import election_frames
 
@@ -48,15 +69,15 @@ def test_election_methods_agree(spark):
     extra = spark.createDataFrame(viral, "doc_id long, text string")
     for docs in (_corpus(spark), _corpus(spark).unionByName(extra)):
         b = with_content_bucket(docs, num_buckets=8)
-        canon_g, census_g = election_frames(b, method="groupby")
-        canon_w, census_w = election_frames(b, method="window")
+        want_canon, want_census = _election_reference(
+            [tuple(r) for r in b.select("doc_id", "text", "bucket").collect()]
+        )
         cols = ["doc_id", "text", "bucket", "_copies"]
-        assert sorted(map(tuple, canon_g.select(cols).collect())) == sorted(
-            map(tuple, canon_w.select(cols).collect())
-        )
-        assert sorted(map(tuple, census_g.collect())) == sorted(
-            map(tuple, census_w.collect())
-        )
+        for single_scan in (False, True):
+            canon, census = election_frames(b, single_scan=single_scan)
+            assert sorted(map(tuple, canon.select(cols).collect())) == want_canon
+            assert sorted(map(tuple, census.collect())) == want_census
+    assert max(c for *_, c in want_canon) == 37
 
 
 def test_closed_form_matches_materialized_chunks(spark):

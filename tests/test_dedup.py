@@ -65,15 +65,23 @@ def docs(spark):
     return spark.createDataFrame(DOCS, "doc_id long, lang string, source string, text string")
 
 
-def _exhaustive_pairs(threshold_pct):
-    """Brute-force oracle: distinct-word Jaccard within (lang, source) blocks."""
+def _ngrams(text, n):
+    """Distinct word n-grams (n = 1: distinct words) on the Java ``\\s``
+    split, joined by one space like ``word_shingles``."""
+    ws = _java_words(text)
+    return {" ".join(ws[i : i + n]) for i in range(len(ws) - n + 1)}
+
+
+def _exhaustive_pairs(threshold_pct, ngram_n=1):
+    """Brute-force oracle: distinct-token Jaccard within (lang, source)
+    blocks, tokens being words (``ngram_n`` = 1) or word n-grams."""
     out = []
     for (ida, la, sa, ta), (idb, lb, sb, tb) in itertools.combinations(DOCS, 2):
         if (la, sa) != (lb, sb):
             continue
-        a, b = set(ta.split()), set(tb.split())
+        a, b = _ngrams(ta, ngram_n), _ngrams(tb, ngram_n)
         inter, union = len(a & b), len(a | b)
-        if 100 * inter >= threshold_pct * union:
+        if union and 100 * inter >= threshold_pct * union:
             lo, hi = min(ida, idb), max(ida, idb)
             out.append((lo, hi, inter, union))
     return sorted(out)
@@ -90,23 +98,16 @@ def test_prefix_filter_equals_exhaustive(docs, threshold):
 
 @pytest.mark.parametrize("ngram_n", [1, 3])
 def test_array_verify_equals_explode_twin(docs, ngram_n):
-    """r06: the array_intersect verify (one row per doc, broadcastable token
-    table, single-reference filter) must return EXACTLY the exploded
-    candidate×token join's rows — same pairs, same n_inter/n_union."""
-    key = lambda rows: sorted(
-        (r["doc_a"], r["doc_b"], r["n_inter"], r["n_union"]) for r in rows
-    )
-    arr = key(
-        dedup.ngram_jaccard_pairs(
-            docs, threshold_pct=50, ngram_n=ngram_n, verify="array"
+    """The array_intersect verify must return EXACTLY the exhaustive
+    distinct-token Jaccard pairs over words (n=1) and word 3-grams — same
+    pairs, same n_inter/n_union."""
+    got = sorted(
+        (r["doc_a"], r["doc_b"], r["n_inter"], r["n_union"])
+        for r in dedup.ngram_jaccard_pairs(
+            docs, threshold_pct=50, ngram_n=ngram_n
         ).collect()
     )
-    exp = key(
-        dedup.ngram_jaccard_pairs(
-            docs, threshold_pct=50, ngram_n=ngram_n, verify="explode"
-        ).collect()
-    )
-    assert arr == exp
+    assert got == _exhaustive_pairs(50, ngram_n) and len(got) > 0
 
 
 def test_repetition_stats_arrow_equals_column_twin(spark):
@@ -178,19 +179,29 @@ def test_bigram_novelty_arrow_equals_exploded_twin(spark):
 
 
 def test_minhash_verify_array_equals_explode_twin(spark):
-    """r06: the shared shingle-Jaccard verify behind minhash_near_dup_pairs
-    must give identical rows through the array_intersect path and the
-    exploded candidate×shingle join."""
+    """The shingle-Jaccard verify behind minhash_near_dup_pairs must keep
+    exactly the sf0.01 minhash candidates whose pure-Python 5-word
+    shingle-set Jaccard is ≥ 50%, with the same n_inter/n_union."""
     from document_parser_spark.sources.session import load_table
 
     d = load_table(spark, "/root/testdata/sf0.01", "documents").select(
         "doc_id", "text"
     )
     cand = dedup.minhash_candidate_pairs(dedup.minhash_signatures(d, shingle_k=5))
-    key = lambda df: sorted(tuple(r) for r in df.collect())
-    arr = key(dedup._verify_jaccard(cand, d, "text", 5, 50, verify="array"))
-    exp = key(dedup._verify_jaccard(cand, d, "text", 5, 50, verify="explode"))
-    assert arr == exp and len(arr) > 0
+    shingles = {r["doc_id"]: _ngrams(r["text"], 5) for r in d.collect()}
+    want = []
+    for r in cand.collect():
+        a, b = shingles[r["doc_a"]], shingles[r["doc_b"]]
+        inter, union = len(a & b), len(a | b)
+        if union and 100 * inter >= 50 * union:
+            want.append((r["doc_a"], r["doc_b"], inter, union))
+    got = sorted(
+        tuple(r)
+        for r in dedup.minhash_near_dup_pairs(
+            d, shingle_k=5, threshold_pct=50
+        ).collect()
+    )
+    assert got == sorted(want) and len(got) > 0
 
 
 def test_hot_word_only_pairs_below_threshold_excluded(docs):
@@ -247,25 +258,22 @@ def test_duplicate_clusters_chain(spark):
 
 
 def test_simhash_arrow_equals_column_twin(spark):
-    """The zero-shuffle Arrow fingerprint must be byte-identical to the
-    explode+aggregate column path, including dropping docs with no words
-    (empty / whitespace-only text) exactly like the explode does."""
-    df = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "the quick brown fox jumps over the lazy cat"),
-            (3, ""),
-            (4, "   \t\n  "),
-            (5, "unicode wörds détente naïve unicode wörds"),
-            (6, "one"),
-        ],
-        "doc_id long, text string",
-    )
-    col = {r["doc_id"]: r["simhash"] for r in dedup.simhash(df).collect()}
+    """The zero-shuffle Arrow fingerprint must equal the ``simhash_docs``
+    DuckDB oracle (explode + per-bit aggregate), including dropping docs
+    with no words (empty / whitespace-only text) exactly like the
+    oracle's unnest does."""
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "the quick brown fox jumps over the lazy cat"),
+        (3, ""),
+        (4, "   \t\n  "),
+        (5, "unicode wörds détente naïve unicode wörds"),
+        (6, "one"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
     arr = {r["doc_id"]: r["simhash"] for r in dedup.simhash_arrow(df).collect()}
-    assert col == arr
-    assert 3 not in arr and 4 not in arr  # wordless docs dropped by BOTH paths
-    assert set(arr) == {1, 2, 5, 6}
+    assert arr == dict(run_oracle_sql("simhash_docs", rows))
+    assert set(arr) == {1, 2, 5, 6}  # wordless docs dropped
 
 
 def test_duplicate_clusters_star_equals_propagation(spark):

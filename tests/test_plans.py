@@ -212,7 +212,7 @@ def test_candidate_generation_has_no_midstream_sort(spark):
         minhash_candidate_pairs,
         minhash_signatures,
         ngram_jaccard_pairs,
-        simhash,
+        simhash_arrow,
         simhash_near_pairs,
     )
 
@@ -227,7 +227,7 @@ def test_candidate_generation_has_no_midstream_sort(spark):
     # terminal orderBy.  (Spark renders range shuffles as
     # 'Exchange rangepartitioning(...)'.)
     for q in (
-        simhash_near_pairs(simhash(d), max_hamming=1),
+        simhash_near_pairs(simhash_arrow(d), max_hamming=1),
         ngram_jaccard_pairs(d, threshold_pct=50),
         similarity.cosine_near_dup_pairs(e, threshold=0.45),
     ):
@@ -249,21 +249,6 @@ def test_gopher_gate_single_pass_no_join(spark):
     plan = plan_of(gopher_gate(d))
     assert "Join" not in plan, plan
     assert plan.count("Generate explode") == 1, plan
-
-
-def test_ngram_jaccard_persist_words_opt_in(spark):
-    """persist_words=True routes all four (doc,word) consumers through the
-    cache (for the corpus-scale write-once pattern); the measured-default
-    False re-derives — see operators/dedup.py for the sf0.1 A/B numbers."""
-    from document_parser_spark.operators.dedup import ngram_jaccard_pairs
-
-    d = load_table(spark, SF, "documents").select("doc_id", "lang", "source", "text")
-    cached = plan_of(ngram_jaccard_pairs(d, threshold_pct=50, persist_words=True))
-    # ≥4 cache-scan nodes = the four consumers read the persisted frame
-    assert cached.count("InMemoryTableScan") >= 4, cached
-    spark.catalog.clearCache()
-    default = plan_of(ngram_jaccard_pairs(d, threshold_pct=50))
-    assert "InMemoryTableScan" not in default, default
 
 
 def test_containment_pairs_equi_join_shaped(spark):
@@ -333,7 +318,7 @@ def test_curation_pipeline_stage_shapes(spark):
     """The end-to-end curation job's three pre-write frames keep the shapes
     its docstring promises at 100 TB (plans/curate.py):
 
-    * election + gate: exactly ONE corpus shuffle (the md5 window), zero
+    * election + gate: exactly ONE corpus shuffle (the md5 aggregate), zero
       joins, and the only Python is vectorized Arrow (the language/word
       pass) — never row-at-a-time BatchEvalPython;
     * the default two-scan census: map-side partial aggregation at the
@@ -353,10 +338,10 @@ def test_curation_pipeline_stage_shapes(spark):
 
     gated = quality_language_gate(canonical.drop("_copies"), keep_langs=("en",))
     plan = plan_of(gated)
-    # skew-proof default: the election is ONE map-side-combined aggregate
+    # skew-proof: the election is ONE map-side-combined aggregate
     # (partial_min/partial_first before the shuffle — each input partition
     # ships at most one row per distinct text, so no partition ever holds
-    # a whole duplicate group), same one-exchange shape as the window twin
+    # a whole duplicate group)
     assert "partial_min" in plan, plan
     assert "partial_first" in plan, plan
     assert "Join" not in plan, plan
@@ -364,14 +349,6 @@ def test_curation_pipeline_stage_shapes(spark):
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "ArrowEvalPython" in plan, plan
     assert "BatchEvalPython" not in plan, plan
-
-    # the window twin: ONE corpus shuffle, zero joins (the shape that wins
-    # when duplicate groups are known-bounded)
-    canonical_w, _ = election_frames(bucketed, method="window")
-    wplan = plan_of(quality_language_gate(canonical_w.drop("_copies")))
-    assert "Join" not in wplan, wplan
-    assert wplan.count("Exchange") == 1, wplan
-    assert "hashpartitioning" in wplan, wplan
 
     cplan = plan_of(census)
     assert "Expand" not in cplan, cplan

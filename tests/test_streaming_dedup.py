@@ -1,6 +1,6 @@
 """Streaming dedup: exact dedup keeps the first occurrence per content hash
-within the watermark (bounded state); the streaming simhash fingerprints are
-byte-identical to the batch path."""
+within the watermark (bounded state); the streaming simhash fingerprints
+equal the batch ``simhash_docs`` DuckDB oracle."""
 
 import shutil
 import uuid
@@ -8,11 +8,11 @@ from datetime import datetime
 
 from pyspark.sql import functions as F
 
-from document_parser_spark.operators import dedup
 from document_parser_spark.streaming.dedup_stream import (
     stream_exact_dedup,
     stream_simhash,
 )
+from tests.conftest import run_oracle_sql
 
 TMP = "/root/repo/.tmp"
 _SCHEMA = "doc_id long, ingest_ts timestamp, text string"
@@ -90,8 +90,7 @@ def test_stream_simhash_equals_batch(spark):
             r["doc_id"]: r["simhash"]
             for r in spark.sql(f"SELECT * FROM {name}").collect()
         }
-        batch_df = spark.createDataFrame(docs, _SCHEMA).select("doc_id", "text")
-        batch = {r["doc_id"]: r["simhash"] for r in dedup.simhash(batch_df).collect()}
+        batch = dict(run_oracle_sql("simhash_docs", [(d, t) for d, _, t in docs]))
         assert streamed == batch
         assert 3 not in streamed
     finally:
