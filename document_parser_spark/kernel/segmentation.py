@@ -30,7 +30,7 @@ from .scanner import (
     repeated_boilerplate_lines,
     scan_markdown,
 )
-from .structure import extract_table_auto
+from .structure import document_to_dicts, extract_tables_columns
 
 #: lines a title lookback can reach above a table begin
 _LOOKBACK = 5
@@ -133,27 +133,31 @@ def scan_segment(
     )
 
 
-def parse_document_segmented(
-    text: str, target_chars: int = 500_000, source: str = "markdown"
+def parse_segment_columns(
+    segment_text: str, line_offset: int, repeated: List[str]
 ) -> Dict[str, Any]:
-    """Single-process reference implementation of the segmented parse —
-    byte-equal to kernel.parse_document; the Spark twin distributes the
-    per-segment scans (plans/segmentation.py)."""
+    """Columnar parse of one segment — ``scan_segment`` plus per-table
+    structure, the ``{"spans", "tables"}`` contract of
+    pipeline.parse_document_columns.  Table ``index`` values are
+    segment-local; reassembly renumbers them in document order."""
     from .html import looks_like_html
 
-    if looks_like_html(text):
-        source = "html"  # parity with parse_document's dispatch
+    source = "html" if line_offset == 0 and looks_like_html(segment_text) else "markdown"
+    spans, raw_tables = scan_segment(segment_text, line_offset, repeated)
+    return {"spans": spans, "tables": extract_tables_columns(raw_tables, source)}
+
+
+def parse_document_segmented(text: str, target_chars: int = 500_000) -> Dict[str, Any]:
+    """Single-process reference implementation of the segmented parse —
+    byte-equal to kernel.parse_document; plans/segmentation.py runs the same
+    ``parse_segment_columns`` per segment, distributed."""
     segments, repeated = segment_document(text, target_chars)
     spans: List[Dict[str, Any]] = []
     tables: List[Dict[str, Any]] = []
     for line_offset, seg_text in segments:
-        seg_spans, seg_raw = scan_segment(seg_text, line_offset, repeated)
-        spans.extend(seg_spans)
-        for raw in seg_raw:
-            t = extract_table_auto(
-                raw, table_index=len(tables), source=source, title=raw.get("title", "")
-            )
-            t["line_start"] = raw["line_start"]
-            t["line_end"] = raw["line_end"]
-            tables.append(t)
-    return {"spans": spans, "tables": tables}
+        seg = parse_segment_columns(seg_text, line_offset, repeated)
+        spans.extend(seg["spans"])
+        tables.extend(seg["tables"])
+    for index, table in enumerate(tables):
+        table["index"] = index
+    return document_to_dicts({"spans": spans, "tables": tables})

@@ -339,9 +339,7 @@ def extract_table_auto_columns(raw: Dict[str, Any], table_index: int, source: st
 
 def extract_table_auto(raw: Dict[str, Any], table_index: int, source: str = "markdown", title: str = "") -> Dict[str, Any]:
     """Dispatch H1 → H5 or H6.  Parity: use_marker_converter.py:583-597."""
-    if detect_table_structure(raw["headers"], raw["rows"]) == "vertical":
-        return extract_vertical(raw, table_index, source, title)
-    return extract_horizontal(raw, table_index, source, title)
+    return columns_to_dicts(extract_table_auto_columns(raw, table_index, source, title))
 
 
 def extract_tables_columns(raw_tables: List[Dict[str, Any]], source: str) -> List[Dict[str, Any]]:

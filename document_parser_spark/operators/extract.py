@@ -51,12 +51,14 @@ def assemble_document_text(df: DataFrame, spans_col: str = "spans") -> DataFrame
     ).withColumn("n_chars", F.length("text"))
 
 
-def _parse_one(text):
-    """Errors are captured per document, never thrown (north_rule lineage;
-    SURVEY.md §4.3).  Tables come back columnar
-    (kernel.pipeline.parse_document_columns)."""
+def _parse_one(parse, *args):
+    """Errors are captured per row, never thrown (north_rule lineage;
+    SURVEY.md §4.3): a failed row gets one ``kind='error'`` span at offset 0,
+    no tables and the message in ``error``.  ``parse`` is a columnar kernel
+    entry returning ``{"spans", "tables", ...}`` — ``_parse_text`` for whole
+    documents, kernel.segmentation.parse_segment_columns for segments."""
     try:
-        parsed = parse_document_columns(text if text is not None else "")
+        parsed = parse(*args)
         return parsed["spans"], parsed["tables"], None
     except Exception as exc:
         message = f"{type(exc).__name__}: {exc}"
@@ -65,6 +67,12 @@ def _parse_one(text):
             [],
             message,
         )
+
+
+def _parse_text(text):
+    """Whole-document parse (kernel.pipeline.parse_document_columns); a null
+    text parses as the empty document."""
+    return parse_document_columns(text if text is not None else "")
 
 
 def _build_parse_arrays(results, spans_type, tables_type):
@@ -210,29 +218,23 @@ def _build_parse_arrays(results, spans_type, tables_type):
     return spans_arr, tables_arr, error_arr
 
 
-def parse_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach parsed ``spans``, ``tables``, ``error`` columns; all other
-    input columns pass through untouched (the big ``text`` column is
-    consumed and dropped).
-
-    Implementation: ``mapInArrow`` over the columnar kernel (cells as
-    parallel lists) + direct offset-based Arrow assembly — a per-cell dict
-    literal and a dict→Arrow re-walk were ~50% of executor-side parse
-    time."""
+def _parse_arrow(df: DataFrame, keep, arg_cols, parse) -> DataFrame:
+    """The one parse boundary: a ``mapInArrow`` pass that hands each row's
+    ``arg_cols`` values to ``parse`` through ``_parse_one`` and assembles the
+    batch with ``_build_parse_arrays``.  Output: the ``keep`` columns
+    untouched, then ``spans``, ``tables``, ``error``."""
     from pyspark.sql.pandas.types import to_arrow_type
 
-    keep = [c for c in df.columns if c not in (text_col, "spans", "tables", "error")]
-    narrowed = df.select(*keep, text_col)
-
+    narrowed = df.select(*keep, *arg_cols)
     spans_type = to_arrow_type(PARSE_RESULT["spans"].dataType)
     tables_type = to_arrow_type(PARSE_RESULT["tables"].dataType)
     n_keep = len(keep)
 
     def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            texts = batch.column(n_keep).to_pylist()
             passthrough = [batch.column(i) for i in range(n_keep)]
-            results = [_parse_one(t) for t in texts]
+            args = zip(*(c.to_pylist() for c in batch.columns[n_keep:]))
+            results = [_parse_one(parse, *a) for a in args]
             yield pa.RecordBatch.from_arrays(
                 passthrough + list(_build_parse_arrays(results, spans_type, tables_type)),
                 names=keep + ["spans", "tables", "error"],
@@ -247,6 +249,19 @@ def parse_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
         ]
     )
     return narrowed.mapInArrow(op, schema=out_schema)
+
+
+def parse_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Attach parsed ``spans``, ``tables``, ``error`` columns; all other
+    input columns pass through untouched (the big ``text`` column is
+    consumed and dropped).
+
+    Implementation: ``mapInArrow`` over the columnar kernel (cells as
+    parallel lists) + direct offset-based Arrow assembly — a per-cell dict
+    literal and a dict→Arrow re-walk were ~50% of executor-side parse
+    time."""
+    keep = [c for c in df.columns if c not in (text_col, "spans", "tables", "error")]
+    return _parse_arrow(df, keep, [text_col], _parse_text)
 
 
 def spans_output(parsed: DataFrame) -> DataFrame:

@@ -1,15 +1,19 @@
 """Distributed oversize-document segmentation (SURVEY.md §4.3).
 
-Normal documents flow through the regular one-UDF parse; documents above
-``threshold_chars`` are split into safe segments (kernel/segmentation.py),
-the segments are scanned IN PARALLEL across the cluster, and the doc is
-reassembled with pure Column algebra:
+Opt-in (``run_extraction_checkpointed(segment_threshold_chars=…)``).
+Documents up to ``threshold_chars`` (and null texts) flow through the
+regular parse; larger ones are split into safe segments
+(kernel/segmentation.py), the segments are scanned IN PARALLEL across the
+cluster through the same mapInArrow parse boundary as
+operators.extract.parse_documents (kernel.segmentation.parse_segment_columns
+per segment), and each doc is reassembled in one aggregate:
 
-  * spans: collect_list(struct(seg, spans)) → array_sort → flatten
-    (struct sort is by leading field, so segment order is preserved);
-  * tables: explode → global re-index by line_start window →
-    ``withField("index", …)`` → sort_array(collect_list) (TABLE's leading
-    field IS the index, so sort_array restores document order).
+  * ``array_sort(collect_list(struct(seg, spans, tables)))`` — struct sort is
+    by the leading field, so segments come back in document order;
+  * spans: flatten of the per-segment spans;
+  * tables: flatten of the per-segment tables, each re-indexed by its
+    position (segment-local indices → the global table index);
+  * error: max over the segments.
 
 Output schema and values are identical to operators.extract.parse_documents
 — asserted in tests/test_segmentation.py.
@@ -17,14 +21,12 @@ Output schema and values are identical to operators.extract.parse_documents
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
+from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..schemas import PARSE_RESULT, SPANS, TABLE
 
 #: docs above this size take the segmented path
 THRESHOLD_CHARS = 1 << 21
@@ -37,14 +39,6 @@ _SEGMENT_ROWS = T.StructType(
         T.StructField("line_offset", T.IntegerType(), False),
         T.StructField("seg_text", T.StringType(), False),
         T.StructField("repeated", T.ArrayType(T.StringType()), False),
-    ]
-)
-
-_SEGMENT_PARSE = T.StructType(
-    [
-        T.StructField("spans", SPANS, False),
-        T.StructField("tables", T.ArrayType(TABLE), False),
-        T.StructField("error", T.StringType(), True),
     ]
 )
 
@@ -68,111 +62,49 @@ def _segment_udf(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
         yield pd.Series(out)
 
 
-@F.pandas_udf(_SEGMENT_PARSE)
-def _parse_segment_udf(
-    batches: Iterator[Tuple[pd.Series, pd.Series, pd.Series]]
-) -> Iterator[pd.DataFrame]:
-    from ..kernel.segmentation import scan_segment
-    from ..kernel.structure import extract_table_auto
-
-    for seg_texts, offsets, repeated in batches:
-        spans_col, tables_col, err_col = [], [], []
-        for seg_text, off, rep in zip(seg_texts, offsets, repeated):
-            try:
-                from ..kernel.html import looks_like_html
-
-                spans, raws = scan_segment(seg_text, int(off), list(rep))
-                src = "html" if int(off) == 0 and looks_like_html(seg_text) else "markdown"
-                tables = []
-                for raw in raws:  # local indices; re-indexed globally later
-                    t = extract_table_auto(raw, table_index=0, source=src, title=raw.get("title", ""))
-                    t["line_start"] = raw["line_start"]
-                    t["line_end"] = raw["line_end"]
-                    tables.append(t)
-                spans_col.append(spans)
-                tables_col.append(tables)
-                err_col.append(None)
-            except Exception as exc:  # pragma: no cover - defensive
-                message = f"{type(exc).__name__}: {exc}"
-                spans_col.append(
-                    [{"kind": "error", "text": message, "media_ref": None, "offset": int(off)}]
-                )
-                tables_col.append([])
-                err_col.append(message)
-        yield pd.DataFrame({"spans": spans_col, "tables": tables_col, "error": err_col})
-
-
 def parse_documents_segmented(
-    df: DataFrame,
-    threshold_chars: int = THRESHOLD_CHARS,
-    segment_partitions: int | None = None,
+    df: DataFrame, threshold_chars: int = THRESHOLD_CHARS
 ) -> DataFrame:
     """(doc_id, text, …) → (doc_id, spans, tables, error); oversize docs are
     scanned segment-parallel.  Column set matches parse_documents minus the
     pass-through input columns."""
-    from ..operators.extract import parse_documents
+    from ..kernel.segmentation import parse_segment_columns
+    from ..operators.extract import _parse_arrow, parse_documents
 
-    normal = parse_documents(
-        df.filter(F.length("text") <= threshold_chars).select("doc_id", "text")
-    ).select("doc_id", "spans", "tables", "error")
-
-    big = df.filter(F.length("text") > threshold_chars).select("doc_id", "text")
-    segs = big.select("doc_id", F.explode(_segment_udf("text")).alias("s")).select(
-        "doc_id",
-        F.col("s.seg").alias("seg"),
-        F.col("s.line_offset").alias("line_offset"),
-        F.col("s.seg_text").alias("seg_text"),
-        F.col("s.repeated").alias("repeated"),
+    # null length compares null: route null texts to the plain parse, which
+    # parses them as the empty document
+    fits = F.coalesce(F.length("text") <= threshold_chars, F.lit(True))
+    normal = parse_documents(df.filter(fits).select("doc_id", "text")).select(
+        "doc_id", "spans", "tables", "error"
     )
-    if segment_partitions is None:
-        # ALWAYS redistribute by default: the exploded segments otherwise
-        # stay in the partition that held their parent doc, so a 100 MB doc's
-        # ~200 segments parse SERIALLY in one task — measured max/median
-        # task ratio 89 on a 20 MB giant before this default (r04); the
-        # whole point of segmentation is that they fan out.  Pass 0 to skip.
-        segment_partitions = big.sparkSession.sparkContext.defaultParallelism * 2
-    if segment_partitions:
-        segs = segs.repartition(segment_partitions, "doc_id", "seg")
 
-    parsed = segs.withColumn(
-        "p", _parse_segment_udf("seg_text", "line_offset", "repeated")
-    ).select("doc_id", "seg", "p.spans", "p.tables", "p.error")
-    # persist: BOTH reassembly branches (spans collect_list, tables
-    # explode+window) consume `parsed`, and the final join makes a third
-    # pass — without this the segment parse re-executes per consumer
-    # (measured: 21.7 s → 9.5 s full pipeline on a 20 MB doc).  Serialized
-    # level per the resume-path precedent (nested span rows are several×
-    # larger deserialized).  Not unpersisted here: the consumer is lazy and
-    # the frame is bounded (segments of oversize docs only).
-    from pyspark import StorageLevel
+    big = df.filter(~fits).select("doc_id", "text")
+    segs = big.select("doc_id", F.explode(_segment_udf("text")).alias("s")).select(
+        "doc_id", "s.*"
+    )
+    # Redistribute: the exploded segments otherwise stay in the partition
+    # that held their parent doc, so a 100 MB doc's ~200 segments parse
+    # SERIALLY in one task — measured max/median task ratio 89 on a 20 MB
+    # giant without it (r04); the whole point of segmentation is that they
+    # fan out.
+    segs = segs.repartition(
+        big.sparkSession.sparkContext.defaultParallelism * 2, "doc_id", "seg"
+    )
+    parsed = _parse_arrow(
+        segs, ["doc_id", "seg"], ["seg_text", "line_offset", "repeated"], parse_segment_columns
+    )
 
-    parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
-
-    spans_df = parsed.groupBy("doc_id").agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("seg", "spans"))),
-                lambda s: s.spans,
-            )
-        ).alias("spans"),
+    ordered = parsed.groupBy("doc_id").agg(
+        F.array_sort(F.collect_list(F.struct("seg", "spans", "tables"))).alias("segs"),
         F.max("error").alias("error"),
     )
-
-    w = Window.partitionBy("doc_id").orderBy("line_start")
-    exploded = parsed.select("doc_id", F.explode("tables").alias("t")).select(
-        "doc_id", "t", F.col("t.line_start").alias("line_start")
-    )
-    reindexed = exploded.withColumn(
-        "t2", F.col("t").withField("index", (F.row_number().over(w) - 1).cast("int"))
-    )
-    tables_df = reindexed.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("t2")).alias("tables")
-    )
-
-    big_out = spans_df.join(tables_df, on="doc_id", how="left").select(
+    big_out = ordered.select(
         "doc_id",
-        "spans",
-        F.coalesce(F.col("tables"), F.array().cast(f"array<{TABLE.simpleString()}>")).alias("tables"),
+        F.flatten(F.transform("segs", lambda s: s.spans)).alias("spans"),
+        F.transform(
+            F.flatten(F.transform("segs", lambda s: s.tables)),
+            lambda t, i: t.withField("index", i),
+        ).alias("tables"),
         "error",
     )
     return normal.unionByName(big_out)

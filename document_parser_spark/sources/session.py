@@ -14,8 +14,9 @@ from pyspark.sql import SparkSession
 
 #: Rows per Arrow batch entering the parse UDF.  Measured: 256 serializes the
 #: pipeline on IPC round-trips at high core counts; 2048 amortizes them while
-#: expected batch bytes stay ~MBs (oversize docs are routed to segmentation
-#: before they can blow a batch up).
+#: expected batch bytes stay ~MBs.  Oversize docs can still blow a batch up
+#: unless the job opts into segmentation (``segment_threshold_chars``, off by
+#: default), which splits them into bounded segments first.
 ARROW_BATCH_ROWS = 2048
 
 

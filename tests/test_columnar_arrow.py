@@ -16,7 +16,7 @@ from document_parser_spark.corpus import (
     synthesize_html_doc,
 )
 from document_parser_spark.kernel import parse_document
-from document_parser_spark.operators.extract import _build_parse_arrays, _parse_one
+from document_parser_spark.operators.extract import _build_parse_arrays, _parse_one, _parse_text
 from document_parser_spark.schemas import PARSE_RESULT
 
 
@@ -36,7 +36,7 @@ def _assert_builder_matches_pyarrow(texts):
     td = pa.array([d["tables"] for d in dict_form], type=tables_type)
     ed = pa.array([None] * len(texts), type=pa.string())
     sc, tc, ec = _build_parse_arrays(
-        [_parse_one(t) for t in texts], spans_type, tables_type
+        [_parse_one(_parse_text, t) for t in texts], spans_type, tables_type
     )
     assert sc.type.equals(sd.type) and tc.type.equals(td.type)
     assert sc.equals(sd), "spans arrays diverge from pyarrow's conversion"

@@ -15,11 +15,11 @@ def test_parse_one_captures_exceptions():
 
     from document_parser_spark.schemas import PARSE_RESULT
 
-    good = extract._parse_one("| a | b |\n|---|---|\n| 1 | 2 |")
+    good = extract._parse_one(extract._parse_text, "| a | b |\n|---|---|\n| 1 | 2 |")
     with mock.patch.object(
         extract, "parse_document_columns", side_effect=ValueError("boom at offset 7")
     ):
-        bad = extract._parse_one("| a |\n|---|\n| 1 |")
+        bad = extract._parse_one(extract._parse_text, "| a |\n|---|\n| 1 |")
     message = "ValueError: boom at offset 7"
     error_span = {"kind": "error", "text": message, "media_ref": None, "offset": 0}
     assert bad == ([error_span], [], message)
@@ -33,6 +33,38 @@ def test_parse_one_captures_exceptions():
     assert spans.to_pylist()[1] == [error_span]
     assert tables.to_pylist()[1] == []
     assert len(tables.to_pylist()[0]) == 1  # the good row keeps its table
+
+
+def test_segment_errors_use_the_shared_capture():
+    """A failing segment scan goes through the same ``_parse_one`` →
+    ``_build_parse_arrays`` capture as a failing document: the segment's row
+    carries one ``kind='error'`` span (offset 0, like a failed document) and
+    the message, and the neighbouring segment of the same document parses."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    from document_parser_spark.kernel import segmentation
+    from document_parser_spark.schemas import PARSE_RESULT
+
+    text = "\n".join(["intro"] * 30 + ["| a | b |", "|---|---|", "| 1 | 2 |"] + ["outro"] * 30)
+    [(off0, seg0), (off1, seg1)], repeated = segmentation.segment_document(text, target_chars=200)
+    good = extract._parse_one(segmentation.parse_segment_columns, seg0, off0, repeated)
+    with mock.patch.object(
+        segmentation, "scan_segment", side_effect=ValueError("boom in segment")
+    ):
+        bad = extract._parse_one(segmentation.parse_segment_columns, seg1, off1, repeated)
+    message = "ValueError: boom in segment"
+    error_span = {"kind": "error", "text": message, "media_ref": None, "offset": 0}
+    assert off1 > 0 and bad == ([error_span], [], message)
+
+    spans, tables, errors = extract._build_parse_arrays(
+        [good, bad],
+        to_arrow_type(PARSE_RESULT["spans"].dataType),
+        to_arrow_type(PARSE_RESULT["tables"].dataType),
+    )
+    assert errors.to_pylist() == [None, message]
+    assert spans.to_pylist()[1] == [error_span]
+    assert tables.to_pylist()[1] == []
+    assert [t["line_start"] for t in tables.to_pylist()[0]] == [30]
 
 
 def test_error_rows_counted_in_lineage(spark):

@@ -1,7 +1,8 @@
 """Package-wide guards: each operator has one implementation in the library.
 Cross-checks compare against oracle SQL or a test-local reference, so no
 ``document_parser_spark`` function may be a ``*_twin`` or take an ``impl``
-or ``verify`` selector between alternative paths."""
+or ``verify`` selector between alternative paths, and parse results are
+built in one place only."""
 
 import ast
 import pathlib
@@ -10,6 +11,11 @@ PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "document_parser_spar
 
 #: parameter names that select between twin implementations of one operator
 SELECTOR_PARAMS = {"impl", "verify"}
+
+#: the parse-result schema names, and the only modules that may use them:
+#: where they are declared and the one Arrow builder of parse results
+PARSE_SCHEMA_NAMES = {"PARSE_RESULT", "SPANS"}
+PARSE_BUILDER_MODULES = {"schemas.py", "operators/extract.py"}
 
 
 def _functions():
@@ -33,4 +39,23 @@ def test_no_implementation_selectors_in_package():
         selectors += [f"{where}({p.arg}=)" for p in params if p.arg in SELECTOR_PARAMS]
     assert not selectors, (
         f"implementation selectors (keep one path; cross-check in tests/): {selectors}"
+    )
+
+
+def test_parse_results_built_in_one_place():
+    offenders = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        module = path.relative_to(PACKAGE).as_posix()
+        if module in PARSE_BUILDER_MODULES:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            names = (
+                [node.id] if isinstance(node, ast.Name)
+                else [node.attr] if isinstance(node, ast.Attribute)
+                else [a.name for a in node.names] if isinstance(node, ast.ImportFrom)
+                else []
+            )
+            offenders += [f"{module}:{node.lineno} {n}" for n in names if n in PARSE_SCHEMA_NAMES]
+    assert not offenders, (
+        f"parse results have one builder (operators.extract._parse_arrow): {offenders}"
     )

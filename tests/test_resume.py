@@ -69,14 +69,19 @@ def test_crash_resume_equals_fresh_run(spark, workdir):
 
 
 def test_segmented_job_output_identical(spark, workdir):
-    """The segment-parallel job writes EXACTLY what the plain job writes."""
+    """The segment-parallel job writes EXACTLY what the plain job writes, and
+    like the plain job it leaves nothing cached behind."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
     df = _input(spark, n=80)
     plain_dir, seg_dir = f"{workdir}/plain", f"{workdir}/seg"
     run_extraction_checkpointed(spark, df, plain_dir, run_id="r-p", num_buckets=4)
+    assert cache.isEmpty()
     run_extraction_checkpointed(
         spark, df, seg_dir, run_id="r-s", num_buckets=4,
         segment_threshold_chars=2_000,  # force most docs through segmentation
     )
+    assert cache.isEmpty()
     assert _spans_rows(spark, seg_dir) == _spans_rows(spark, plain_dir)
 
 

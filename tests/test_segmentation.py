@@ -11,7 +11,7 @@ from document_parser_spark.kernel.segmentation import (
     segment_document,
 )
 from document_parser_spark.operators.extract import assemble_document_text, parse_documents
-from document_parser_spark.plans.segmentation import parse_documents_segmented
+from document_parser_spark.plans.segmentation import TARGET_CHARS, parse_documents_segmented
 from document_parser_spark.sources.data import fixture_input_df
 
 
@@ -49,9 +49,19 @@ def test_segment_sizes_bounded():
 
 
 def test_spark_segmented_equals_plain(spark):
-    df = assemble_document_text(fixture_input_df(spark))
+    base = assemble_document_text(fixture_input_df(spark)).select("doc_id", "text")
+    pathological = next(d for d in fixture_documents() if d["doc_id"] == "fx-pathological")
+    # 11 copies (~1.17 MB) split into three TARGET_CHARS segments, so the
+    # Spark reassembly really concatenates segments and renumbers tables
+    giant = "\n".join([pathological["text"]] * 11)
+    assert len(segment_document(giant, TARGET_CHARS)[0]) == 3
+    extra = spark.createDataFrame(
+        [("fx-giant", giant), ("fx-null-text", None)], "doc_id string, text string"
+    )
+    df = base.unionByName(extra)
     plain = parse_documents(df).select("doc_id", "spans", "tables", "error")
-    # threshold=0 chars forces EVERY doc through the segmented path
+    # fx-pathological and fx-giant exceed 10,000 chars and take the segmented
+    # path; the other fixtures and the null-text row take the plain parse
     seg = parse_documents_segmented(df, threshold_chars=10_000)
 
     def canon(frame):
@@ -62,6 +72,7 @@ def test_spark_segmented_equals_plain(spark):
 
     a, b = canon(plain), canon(seg)
     assert set(a) == set(b)
+    assert len(a["fx-giant"][1]) == 11 * len(a["fx-pathological"][1])
     for doc_id in a:
         assert a[doc_id][0] == b[doc_id][0], (doc_id, "spans")
         assert a[doc_id][1] == b[doc_id][1], (doc_id, "tables")
