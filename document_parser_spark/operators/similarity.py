@@ -1,59 +1,67 @@
 """Similarity search over an embedding column (array<float>).
 
-Paths:
-  * ``brute_force_topk``       — the float performance baseline: native
-    ``F.zip_with`` dot product in double precision, whole-stage codegen,
-    per-query top-k.  This is the path bench.py measures.
-  * ``brute_force_topk_exact`` — the oracle-comparable twin: components are
-    scaled to exact integers (``floor(val * 1e8)``), dot/norm accumulate in
-    int64 (order-independent), and only the final cosine divides in double —
-    bit-identical to the DuckDB mirror.  Query norms come from the query's
-    OWN vector (not looked up in the corpus), so arbitrary query frames work.
-  * ``lsh_bucketed_topk``      — banded sign-LSH (bands × rows_per_band
-    deterministic hyperplanes) buckets vectors; a pair is a candidate iff it
-    shares ≥1 band bucket; exact integer cosine ranks candidates.
-  * ``ivf_topk``               — IVF-flat with a k-means-refined quantizer
-    (integer-exact Lloyd), nlist ~ √n, nprobe = nlist/8 (≤12.5% probed at
-    any corpus size).  The right tool when the corpus actually clusters.
-  * ``sketch_topk``            — hamming-sketch scan + exact re-rank: the
-    measured winner on THIS corpus (isotropic embeddings, where partition
-    membership is nearly independent of cosine neighborhoods — BASELINE.md
-    has the sweep: sketch 0.995 recall@10 at 10% scored vs IVF ≤0.63 /
-    LSH 0.78 at similar fractions).  At rest the 64 B sketch column is the
-    only thing the full-corpus pass reads.
-  * ``cosine_near_dup_pairs``  — embedding near-dup for the dedup family:
-    sketch-hamming candidates + exact integer cosine threshold, both inside
-    one cogrouped Arrow pass over block-pair groups.
+Every ANN method is a candidate generator feeding one exact tail: the
+(query_id, vec_id) candidates join both float vectors, ``cosine_exact_arrow``
+scores them (components scaled to exact integers ``floor(val * 1e8)``,
+dot/norms in int64, one double divide — bit-identical to the DuckDB
+mirror), and ``_rank_topk`` keeps the top k per query.  The generators:
 
-  * ``ivf_sketch_topk``        — the IVF→sketch→exact composition for
-    corpora that actually cluster: probe nprobe/nlist of the corpus,
-    hamming-rank ONLY the probed lists' sketch words, exact-rerank the top
-    slice — sub-linear in BOTH the sketch scan (nprobe/nlist of the corpus)
+  * ``brute_force_topk_exact`` — every corpus vector (broadcast cross join,
+    no explode).  Query norms come from the query's OWN vector, so
+    arbitrary query frames work.  ``brute_force_topk`` is the same body
+    scored with the float ``cosine`` (native ``F.zip_with``, whole-stage
+    codegen) — the baseline bench.py measures.
+  * ``lsh_bucketed_topk``      — banded sign-LSH (bands × rows_per_band
+    deterministic hyperplanes): a vector is a candidate iff it shares ≥1
+    band bucket with the query.
+  * ``ivf_topk``               — the members of the query's nprobe nearest
+    lists under a k-means-refined quantizer (integer-exact Lloyd), nlist ~
+    √n, nprobe = nlist/8 (≤12.5% probed at any corpus size).  The right
+    tool when the corpus actually clusters.
+  * ``sketch_topk``            — the ``rerank_frac_pct``% of the corpus
+    nearest by 512-bit sketch hamming: the measured winner on THIS corpus
+    (isotropic embeddings, where partition membership is nearly independent
+    of cosine neighborhoods — BASELINE.md has the sweep: sketch 0.995
+    recall@10 at 10% scored vs IVF ≤0.63 / LSH 0.78 at similar fractions).
+    At rest the 64 B sketch column is the only thing the full-corpus pass
+    reads.
+  * ``ivf_sketch_topk``        — IVF probe, then sketch-rank ONLY the probed
+    lists: sub-linear in BOTH the sketch scan (nprobe/nlist of the corpus)
     and the exact scoring (rerank_frac of the probed set, ~1.3% of the
     corpus at defaults).  On THIS sandbox's isotropic embeddings any
     partition pruning caps recall at ~0.5-0.6 (measured, BASELINE.md), so
     the flat ``sketch_topk`` stays the default; on clustered data (pytest:
-    tests/test_similarity.py clustered-corpus case) the hybrid holds
-    recall ≥0.9 at an exact-scored fraction below either parent.
+    tests/test_similarity.py clustered-corpus case) it holds recall ≥0.9 at
+    an exact-scored fraction below either parent.
+  * ``sketch_topk_from_index`` / ``ivf_sketch_topk_from_index`` — the two
+    sketch generators over the PERSISTED index table (plans/ann_index.py
+    builds it; build-once / query-many): the corpus pass scans only the
+    stored 64 B sketches and the float column is read once, by the exact
+    tail.  Same body and same rows as the inline generators over the same
+    corpus (and centroids); amortization measured in BASELINE.md.
   * ``ann_topk``               — the single entry-point facade: routes to
     ``sketch_topk`` by default (the measured winner), with ``method=`` for
-    the specialized paths.
-  * ``sketch_topk_from_index`` / ``ivf_sketch_topk_from_index`` — the same
-    queries against the PERSISTED index table (plans/ann_index.py builds
-    it; build-once / query-many): the corpus pass scans only the stored
-    64 B sketches and the float column is read exactly once, for the
-    rerank join.  Byte-identical to the inline twins; amortization
-    measured in BASELINE.md.
+    the other generators.
+
+``cosine_near_dup_pairs`` is the dedup family's embedding near-dup: sketch-
+hamming candidates + the same exact integer cosine, both inside one
+cogrouped Arrow pass over block-pair groups.
+
+The numeric kernels exist once each and cross the Python boundary in one
+vectorized form: ``_int_matrix`` (int64 floor-scaling), ``_sign_matrix``
+(the md5 hyperplanes), ``_packed_signs_udf`` (band buckets AND sketch
+words), ``_nearest_lists`` (centroid probe) and ``_hamming_words``.
 
 Determinism: hyperplane signs are the parity of the first md5 nibble of
 "plane:pos" — reproducible in Python (sign matrix is computed driver-side
-with hashlib and inlined as a LITERAL column, zero per-row hashing) and in
-SQL (DuckDB mirror in __spark_entry__.py), so every integer projection,
-bucket id, and cosine is bit-identical across engines.
+with hashlib and shipped inside the UDF, zero per-row hashing) and in SQL
+(DuckDB mirror in __spark_entry__.py), so every integer projection, bucket
+id, and cosine is bit-identical across engines.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
 import numpy as np
@@ -111,56 +119,82 @@ def cosine(a: Column, b: Column) -> Column:
 
 # --- exact integer arithmetic (oracle-comparable) ----------------------------
 
-def _int_val(x: Column) -> Column:
-    return F.floor(x.cast("double") * F.lit(SCALE)).cast("long")
-
-
-def _int_dot(a: Column, b: Column) -> Column:
-    """Σ floor(aᵢ·1e8)·floor(bᵢ·1e8) in int64 — order-independent, exact."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: _int_val(x) * _int_val(y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def _int_nsq(a: Column) -> Column:
-    return F.aggregate(
-        a,
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + _int_val(x) * _int_val(x),
-    )
-
-
-def cosine_exact(a: Column, b: Column) -> Column:
-    """Cosine of the integer-scaled vectors: exact int64 dot/norms, one double
-    division at the end — bit-identical in any engine (IEEE sqrt/divide are
-    correctly rounded).  Pure-Column formulation (interpreted HOFs) — used
-    for small pair counts and as the cross-check twin of the Arrow path."""
-    return _int_dot(a, b).cast("double") / (
-        F.sqrt(_int_nsq(a).cast("double")) * F.sqrt(_int_nsq(b).cast("double"))
-    )
+def _int_matrix(vecs) -> np.ndarray:
+    """n × dim int64 matrix of the integer-scaled components floor(v·1e8):
+    float64(v)·1e8 then floor matches Spark's floor(double) and the DuckDB
+    mirror's ``CAST(floor(CAST(v AS DOUBLE) * 1e8) AS BIGINT)`` bit-for-bit,
+    so every int64 sum built on it (dot, norm, projection) is exact and
+    order-independent in all three engines."""
+    return np.floor(
+        np.stack([np.asarray(v, dtype=np.float64) for v in vecs]) * SCALE
+    ).astype(np.int64)
 
 
 @F.pandas_udf(DoubleType())
 def cosine_exact_arrow(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched twin of ``cosine_exact`` — one int64 numpy pass per
-    batch instead of interpreted per-element lambdas per pair (candidate-
-    heavy stages score ~100× faster).  Bit-identical: floor/scale matches
-    Spark's floor(double)·cast(long), integer sums are order-independent,
-    and the final double divide/sqrt are IEEE-exact in both."""
+    """Cosine of the integer-scaled vectors: exact int64 dot/norms, one
+    double division at the end — bit-identical in any engine (IEEE sqrt/
+    divide are correctly rounded).  One int64 numpy pass per Arrow batch
+    (interpreted per-element HOF lambdas per pair score ~100× slower)."""
     if not len(a):
         return pd.Series([], dtype="float64")
-    ia = np.floor(
-        np.stack([np.asarray(v, dtype=np.float64) for v in a]) * SCALE
-    ).astype(np.int64)
-    ib = np.floor(
-        np.stack([np.asarray(v, dtype=np.float64) for v in b]) * SCALE
-    ).astype(np.int64)
+    ia = _int_matrix(a)
+    ib = _int_matrix(b)
     dot = (ia * ib).sum(axis=1).astype(np.float64)
     na = np.sqrt((ia * ia).sum(axis=1).astype(np.float64))
     nb = np.sqrt((ib * ib).sum(axis=1).astype(np.float64))
     return pd.Series(dot / (na * nb))
+
+
+# --- the shared top-k tail ----------------------------------------------------
+
+def _rank_topk(scored: DataFrame, k: int, by: Column | None = None) -> DataFrame:
+    """Top-k rows per query_id by ``by`` (default: cos_sim descending), ties →
+    lowest vec_id, numbered in ``rank``.  Catalyst turns the ``rank <= k``
+    filter into a map-side WindowGroupLimit, so scored rows are pruned per
+    partition before the exchange."""
+    order = F.desc("cos_sim") if by is None else by
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("vec_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _exact_topk(
+    cand: DataFrame, embeddings: DataFrame, queries: DataFrame, k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """The exact tail every candidate generator ends in: (query_id, vec_id)
+    candidates fetch the corpus float vector (join) and the query's (the
+    small query set broadcasts), ``cosine_exact_arrow`` scores them, top-k.
+    The only stage of an ANN query that reads the float column in full."""
+    e_vec = embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v_vec"))
+    q_vec = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
+    scored = (
+        cand.join(e_vec, "vec_id")
+        .join(F.broadcast(q_vec), "query_id")
+        .select(
+            "query_id",
+            "vec_id",
+            cosine_exact_arrow(F.col("q_vec"), F.col("v_vec")).alias("cos_sim"),
+        )
+    )
+    return _rank_topk(scored, k)
+
+
+def _brute_topk(
+    embeddings: DataFrame, queries: DataFrame, k: int, id_col: str, vec_col: str, cos
+) -> DataFrame:
+    """Every corpus vector scored by ``cos`` against every query.  Queries
+    are broadcast (a query set is small by definition); the corpus side
+    streams — no shuffle until the per-query top-k window."""
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
+    pairs = embeddings.select(
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v_vec")
+    ).crossJoin(F.broadcast(q))
+    scored = pairs.filter(F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        "vec_id",
+        cos(F.col("q_vec"), F.col("v_vec")).alias("cos_sim"),
+    )
+    return _rank_topk(scored, k)
 
 
 def brute_force_topk(
@@ -170,25 +204,9 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact cosine top-k per query vector.  Queries are broadcast (a query
-    set is small by definition); the corpus side streams — no shuffle until
-    the per-query top-k, which TakeOrderedAndProject/window keeps bounded."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    pairs = embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v_vec")
-    ).crossJoin(F.broadcast(q))
-    scored = pairs.filter(F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        "vec_id",
-        cosine(F.col("q_vec"), F.col("v_vec")).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    """Cosine top-k per query vector in double precision (float ``cosine``,
+    whole-stage codegen) — the linear-scan performance baseline."""
+    return _brute_topk(embeddings, queries, k, id_col, vec_col, cosine)
 
 
 def brute_force_topk_exact(
@@ -198,29 +216,14 @@ def brute_force_topk_exact(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Oracle-comparable top-k: same plan shape as ``brute_force_topk``
-    (broadcast cross join, no explode), but integer-exact arithmetic.  The
-    query norm is computed from the query's own vector, so the query frame
-    need not be a subset of the corpus."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    pairs = embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v_vec")
-    ).crossJoin(F.broadcast(q))
-    scored = pairs.filter(F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        "vec_id",
-        cosine_exact(F.col("q_vec"), F.col("v_vec")).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    """Oracle-comparable top-k: the ``brute_force_topk`` plan (broadcast
+    cross join, no explode) scored by ``cosine_exact_arrow``.  The query
+    norm is computed from the query's own vector, so the query frame need
+    not be a subset of the corpus."""
+    return _brute_topk(embeddings, queries, k, id_col, vec_col, cosine_exact_arrow)
 
 
-# --- banded sign-LSH ----------------------------------------------------------
+# --- deterministic sign planes --------------------------------------------------
 
 def plane_signs(plane: int, dim: int) -> list[int]:
     """Deterministic ±1 hyperplane: parity of the first md5 nibble of
@@ -232,43 +235,56 @@ def plane_signs(plane: int, dim: int) -> list[int]:
     ]
 
 
+@functools.lru_cache(maxsize=None)
+def _sign_matrix(dim: int, planes: int) -> np.ndarray:
+    """dim × planes int64 matrix whose column p is ``plane_signs(p, dim)`` —
+    hashed once per (dim, planes) and shared read-only by every sign
+    kernel."""
+    signs = np.array([plane_signs(p, dim) for p in range(planes)], dtype=np.int64).T
+    signs.setflags(write=False)
+    return signs
+
+
 def probe_dim(df: DataFrame, vec_col: str = "embedding") -> int:
     """One tiny driver-side job to learn the (uniform) embedding dimension;
-    the sign matrix is then inlined as literals — zero per-row hashing."""
+    the sign matrix is then built once, before any row is read — zero
+    per-row hashing."""
     row = df.select(
         F.min(F.size(vec_col)).alias("lo"), F.max(F.size(vec_col)).alias("hi")
     ).first()
-    if row is None or row.lo != row.hi:
+    if row.hi is None:
+        raise ValueError(f"cannot probe the dimension of {vec_col!r}: the frame is empty")
+    if row.lo != row.hi:
         raise ValueError(f"embedding dimension not uniform: {row}")
     return int(row.hi)
 
 
-def _band_buckets_udf(dim: int, bands: int, rows_per_band: int):
-    """Arrow-batched bucket computation: ONE int64 matmul per batch instead
-    of bands·rows_per_band interpreted per-element lambdas per row (the
-    higher-order-function path is ~30× slower — HOFs don't codegen).
+def _packed_signs_udf(dim: int, planes: int, bits: int):
+    """Arrow-batched sign-bit packing: ONE int64 matmul per batch against the
+    first ``planes`` md5 sign planes; bit j of word w is ``projection(w·bits
+    + j) > 0``, so each vector becomes ``planes/bits`` long words.  With
+    ``bits = ROWS_PER_BAND`` the words are the banded-LSH buckets; with
+    ``bits = SKETCH_WORD_BITS`` they are the packed sketch (32-bit words: a
+    1<<63 top bit would overflow signed int64 in numpy AND DuckDB).
 
-    Exactness is preserved: np.floor(float64(v)·1e8)→int64 matches Spark's
-    floor(double)·cast(long) bit-for-bit, and integer matmul is
-    order-independent — so buckets equal the DuckDB mirror exactly."""
-    planes = bands * rows_per_band
-    signs = np.array(
-        [plane_signs(p, dim) for p in range(planes)], dtype=np.int64
-    ).T  # dim × planes
-    weights = np.array([1 << j for j in range(rows_per_band)], dtype=np.int64)
+    Exact: the projection is an int64 sum of ``_int_matrix`` components
+    (order-independent), the bit a comparison, the packing a sum of 1<<j —
+    so words equal the DuckDB mirror's.  Interpreted per-element HOF
+    lambdas per plane would be ~30× slower (HOFs don't codegen)."""
+    signs = _sign_matrix(dim, planes)
+    weights = np.array([1 << j for j in range(bits)], dtype=np.int64)
 
     @F.pandas_udf("array<long>")
-    def buckets(vecs: pd.Series) -> pd.Series:
+    def packed_signs(vecs: pd.Series) -> pd.Series:
         if not len(vecs):
             return pd.Series([], dtype=object)
-        x = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        iv = np.floor(x * SCALE).astype(np.int64)
-        bits = (iv @ signs) > 0  # n × planes
-        per_band = bits.reshape(len(vecs), bands, rows_per_band) @ weights
-        return pd.Series(list(per_band))
+        on = (_int_matrix(vecs) @ signs) > 0  # n × planes
+        return pd.Series(list(on.reshape(len(vecs), planes // bits, bits) @ weights))
 
-    return buckets
+    return packed_signs
 
+
+# --- banded sign-LSH ----------------------------------------------------------
 
 def lsh_band_buckets(
     df: DataFrame,
@@ -281,7 +297,7 @@ def lsh_band_buckets(
     """(id, band, bucket) — exploded band buckets from the Arrow/numpy
     path, ready for the bucket join (tests check them against a pure-Python
     ``plane_signs`` projection)."""
-    udf = _band_buckets_udf(dim, bands, rows_per_band)
+    udf = _packed_signs_udf(dim, bands * rows_per_band, rows_per_band)
     return df.select(
         F.col(id_col).alias("id"),
         F.posexplode(udf(F.col(vec_col))).alias("band", "bucket"),
@@ -311,22 +327,7 @@ def lsh_bucketed_topk(
         .select("query_id", F.col("id").alias("vec_id"))
         .distinct()
     )
-    e_vec = embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v_vec"))
-    q_vec = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-    scored = (
-        cand.join(e_vec, "vec_id")
-        .join(F.broadcast(q_vec), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            cosine_exact_arrow(F.col("q_vec"), F.col("v_vec")).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _exact_topk(cand, embeddings, queries, k, id_col, vec_col)
 
 
 # --- IVF-flat (inverted-file) ANN ---------------------------------------------
@@ -349,11 +350,6 @@ def ivf_centroids(
     )
 
 
-def _ivec(vec: Column) -> Column:
-    """array<long> of the integer-scaled components."""
-    return F.transform(vec, _int_val)
-
-
 def _floor_div_expr(s: str, c: str) -> str:
     """Portable exact floor division for Spark SQL and DuckDB: subtract the
     canonical (non-negative) mod first, so truncating and flooring integer
@@ -361,27 +357,30 @@ def _floor_div_expr(s: str, c: str) -> str:
     return f"({s} - ((({s} % {c}) + {c}) % {c})) DIV {c}"
 
 
+def _nearest_lists(iv: np.ndarray, cmat: np.ndarray, cnsq: np.ndarray) -> np.ndarray:
+    """Centroid order per vector, nearest first: int64 dot against the
+    (nlist × dim) centroid matrix scored by dot/|centroid| (the vector's own
+    norm is a positive per-row constant — it cannot change the per-vector
+    ranking, and leaving it out keeps the SQL mirror cheap).  Ties break to
+    the LOWEST cid: stable argsort on the descending score with columns
+    pre-ordered by cid — exactly the SQL's ``ORDER BY score DESC, cid ASC``.
+    ``cnsq`` is the centroids' int64 norm² converted ONCE to double —
+    matching the mirror's CAST(sum(cval*cval) AS DOUBLE) bit-for-bit (a
+    float64 summation would round differently above 2^53)."""
+    score = (iv @ cmat.T).astype(np.float64) / np.sqrt(cnsq)
+    return np.argsort(-score, axis=1, kind="stable")
+
+
 def _probe_udf(cids: np.ndarray, cmat: np.ndarray, nprobe: int):
-    """Arrow-batched nearest-centroid probe: ONE int64 matmul per batch
-    against the (nlist × dim) centroid matrix, scored by dot/|centroid|
-    (the vector's own norm is a positive per-row constant — it cannot change
-    the per-vector ranking, and leaving it out keeps the SQL mirror cheap).
-    Ties break to the LOWEST cid: stable argsort on the descending score with
-    columns pre-ordered by cid — exactly the SQL's
-    ``ORDER BY score DESC, cid ASC``."""
-    # int64 norm sums (exact, order-independent), THEN one IEEE conversion —
-    # matches the SQL mirror's CAST(sum(cval*cval) AS DOUBLE) bit-for-bit
-    # (a float64 summation would round differently above 2^53)
+    """Arrow-batched nearest-centroid probe: the ``nprobe`` nearest cids per
+    vector (``_nearest_lists``), ONE int64 matmul per batch."""
     cnsq = (cmat * cmat).sum(axis=1).astype(np.float64)
 
     @F.pandas_udf("array<long>")
     def probe(vecs: pd.Series) -> pd.Series:
         if not len(vecs):
             return pd.Series([], dtype=object)
-        x = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        iv = np.floor(x * SCALE).astype(np.int64)
-        score = (iv @ cmat.T).astype(np.float64) / np.sqrt(cnsq)
-        order = np.argsort(-score, axis=1, kind="stable")[:, :nprobe]
+        order = _nearest_lists(_int_matrix(vecs), cmat, cnsq)[:, :nprobe]
         return pd.Series([cids[o].tolist() for o in order])
 
     return probe
@@ -395,8 +394,7 @@ def _partial_sums_udf(cids: np.ndarray, cmat: np.ndarray):
     shape posexploded every vector into ``dim`` rows: an n×dim-row shuffle
     per Lloyd round).  int64 sums are associative, so the merged centroids —
     and the DuckDB oracle that replays the explode+groupBy form — are
-    bit-identical.  Scoring/tie-breaking is exactly ``_probe_udf``'s
-    (stable argsort on -dot/|centroid|, cids pre-ordered ascending)."""
+    bit-identical.  Assignment is ``_probe_udf``'s (``_nearest_lists``)."""
     cnsq = (cmat * cmat).sum(axis=1).astype(np.float64)
 
     def part(batches):
@@ -406,10 +404,8 @@ def _partial_sums_udf(cids: np.ndarray, cmat: np.ndarray):
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
-            iv = np.floor(x * SCALE).astype(np.int64)
-            score = (iv @ cmat.T).astype(np.float64) / np.sqrt(cnsq)
-            a = np.argsort(-score, axis=1, kind="stable")[:, 0]
+            iv = _int_matrix(pdf["_v"])
+            a = _nearest_lists(iv, cmat, cnsq)[:, 0]
             for idx in np.unique(a):
                 m = a == idx
                 acc_s[idx] += iv[m].sum(axis=0, dtype=np.int64)
@@ -451,12 +447,10 @@ def ivf_centroids_kmeans(
     (1000 × dim at 10^6 vectors); measured 6.6 s → ~1 s for 2 rounds at
     sf0.1 vs the posexplode(n×dim) shape."""
     dim = probe_dim(embeddings, vec_col)
-    init = ivf_centroids(embeddings, nlist, id_col, vec_col).select(
-        "cid", _ivec(F.col("c_vec")).alias("civ")
-    )
+    init = ivf_centroids(embeddings, nlist, id_col, vec_col)
     rows = sorted(init.collect(), key=lambda r: r["cid"])
     cids = np.array([r["cid"] for r in rows], dtype=np.int64)
-    cmat = np.array([r["civ"] for r in rows], dtype=np.int64)
+    cmat = _int_matrix([r["c_vec"] for r in rows])
 
     corpus = embeddings.select(F.col(vec_col).alias("_v"))
     for _ in range(iters):
@@ -518,22 +512,7 @@ def ivf_topk(
         .select("query_id", "vec_id")
         .distinct()
     )
-    e_vec = embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v_vec"))
-    q_vec = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-    scored = (
-        cand.join(e_vec, "vec_id")
-        .join(F.broadcast(q_vec), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            cosine_exact_arrow(F.col("q_vec"), F.col("v_vec")).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _exact_topk(cand, embeddings, queries, k, id_col, vec_col)
 
 
 # --- hamming-sketch rerank ANN --------------------------------------------------
@@ -555,76 +534,43 @@ SKETCH_WORD_BITS = 32  # 32 bits/word: 1<<31 stays far from signed-64 overflow
 RERANK_FRAC_PCT = 10  # % of the corpus exactly re-scored per query
 
 
-def _sketch_udf(dim: int, planes: int = SKETCH_PLANES):
-    """Arrow-batched sketch: ONE int64 matmul per batch against the
-    deterministic md5 sign planes (same ``plane_signs`` machinery as the
-    banded LSH — bit j of word w is ``projection(32w+j) > 0``), packed into
-    ``planes/32`` long words of 32 bits each (a 1<<63 top bit would overflow
-    signed int64 in numpy AND DuckDB — 32-bit words sidestep it).  Exact in
-    SQL: the projection is an int64 sum, the bit decision a comparison, the
-    packing a sum of 1<<j."""
-    signs = np.array(
-        [plane_signs(p, dim) for p in range(planes)], dtype=np.int64
-    ).T  # dim × planes
-    weights = np.array([1 << j for j in range(SKETCH_WORD_BITS)], dtype=np.int64)
-
-    @F.pandas_udf("array<long>")
-    def sketch(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series([], dtype=object)
-        x = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        iv = np.floor(x * SCALE).astype(np.int64)
-        bits = (iv @ signs) > 0  # n × planes
-        words = bits.reshape(len(vecs), planes // SKETCH_WORD_BITS, SKETCH_WORD_BITS) @ weights
-        return pd.Series(list(words))
-
-    return sketch
-
-
-def _hamming_words(words: int) -> Column:
-    """XOR+POPCNT hamming distance between the packed sketch columns ``sk``
-    and ``qsk`` — ``words`` integer ops per pair, all in whole-stage codegen."""
+def _hamming_words(words: int, a: str = "sk", b: str = "qsk") -> Column:
+    """XOR+POPCNT hamming distance between two packed sketch columns —
+    ``words`` integer ops per pair, all in whole-stage codegen."""
     return sum(
-        F.bit_count(F.col("sk").getItem(i).bitwiseXOR(F.col("qsk").getItem(i)))
+        F.bit_count(F.col(a).getItem(i).bitwiseXOR(F.col(b).getItem(i)))
         for i in range(words)
     )
 
 
 def _topm_exact_rerank(
-    scored: DataFrame,
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int,
-    m: int,
-    id_col: str,
-    vec_col: str,
+    scored: DataFrame, embeddings: DataFrame, queries: DataFrame, k: int, m: int,
+    id_col: str, vec_col: str,
 ) -> DataFrame:
-    """Shared sketch-ANN tail: keep the ``m`` hamming-nearest candidates per
-    query (ties → lowest vec_id), fetch float vectors for ONLY those rows,
-    exact integer-cosine re-score, top-k.  ``scored`` is (query_id, vec_id,
-    hamming); this is the only stage that touches the float column."""
-    w = Window.partitionBy("query_id").orderBy(F.asc("hamming"), F.asc("vec_id"))
-    cand = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= m)
-        .select("query_id", "vec_id")
+    """Sketch-generator candidates: the ``m`` hamming-nearest rows per query
+    (ties → lowest vec_id) of ``scored`` (query_id, vec_id, hamming), handed
+    to the exact tail."""
+    cand = _rank_topk(scored, m, F.asc("hamming")).select("query_id", "vec_id")
+    return _exact_topk(cand, embeddings, queries, k, id_col, vec_col)
+
+
+def _sketch_scan_topk(
+    e_sk: DataFrame, embeddings: DataFrame, queries: DataFrame, n: int, dim: int, k: int,
+    rerank_frac_pct: int, planes: int, id_col: str, vec_col: str,
+) -> DataFrame:
+    """Shared sketch-scan body over an inline or persisted (vec_id, sk)
+    corpus side of ``n`` rows: every corpus sketch is hamming-scored against
+    the broadcast query sketches, the ``rerank_frac_pct``% nearest go to the
+    exact tail."""
+    m = max(k, (n * rerank_frac_pct + 99) // 100)
+    udf = _packed_signs_udf(dim, planes, SKETCH_WORD_BITS)
+    q_sk = queries.select(F.col(id_col).alias("query_id"), udf(F.col(vec_col)).alias("qsk"))
+    scored = (
+        e_sk.crossJoin(F.broadcast(q_sk))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id", _hamming_words(planes // SKETCH_WORD_BITS).alias("hamming"))
     )
-    e_vec = embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v_vec"))
-    q_vec = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-    rescored = (
-        cand.join(e_vec, "vec_id")
-        .join(F.broadcast(q_vec), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            cosine_exact_arrow(F.col("q_vec"), F.col("v_vec")).alias("cos_sim"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-    )
+    return _topm_exact_rerank(scored, embeddings, queries, k, m, id_col, vec_col)
 
 
 def sketch_topk(
@@ -642,22 +588,16 @@ def sketch_topk(
     that.  Fully deterministic and integer/bit-exact → full DuckDB oracle.
 
     Plan shape: the corpus side flows once through the sketch UDF (at rest
-    this column would be a precomputed index table), the tiny query sketch
-    set broadcasts, hamming is 8 XOR+POPCNTs in codegen, and only candidate
-    rows rejoin the float vectors."""
+    this column is the persisted index — ``sketch_topk_from_index``), the
+    tiny query sketch set broadcasts, hamming is 16 XOR+POPCNTs in codegen,
+    and only candidate rows rejoin the float vectors."""
     n = embeddings.count()
-    m = max(k, (n * rerank_frac_pct + 99) // 100)
     dim = probe_dim(embeddings, vec_col)
-    udf = _sketch_udf(dim, planes)
-    words = planes // SKETCH_WORD_BITS
+    udf = _packed_signs_udf(dim, planes, SKETCH_WORD_BITS)
     e_sk = embeddings.select(F.col(id_col).alias("vec_id"), udf(F.col(vec_col)).alias("sk"))
-    q_sk = queries.select(F.col(id_col).alias("query_id"), udf(F.col(vec_col)).alias("qsk"))
-    scored = (
-        e_sk.crossJoin(F.broadcast(q_sk))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", _hamming_words(words).alias("hamming"))
+    return _sketch_scan_topk(
+        e_sk, embeddings, queries, n, dim, k, rerank_frac_pct, planes, id_col, vec_col
     )
-    return _topm_exact_rerank(scored, embeddings, queries, k, m, id_col, vec_col)
 
 
 def sketch_topk_from_index(
@@ -677,19 +617,10 @@ def sketch_topk_from_index(
     far smaller table, and the float vectors are read exactly once, for the
     top-m rerank join (plan-gated in tests/test_ann_index.py).  Results are
     byte-identical to ``sketch_topk`` over the same corpus (equality-gated)."""
-    n = index.count()
-    m = max(k, (n * rerank_frac_pct + 99) // 100)
-    dim = probe_dim(queries, vec_col)
-    udf = _sketch_udf(dim, planes)
-    words = planes // SKETCH_WORD_BITS
-    q_sk = queries.select(F.col(id_col).alias("query_id"), udf(F.col(vec_col)).alias("qsk"))
-    scored = (
-        index.select("vec_id", "sk")
-        .crossJoin(F.broadcast(q_sk))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", _hamming_words(words).alias("hamming"))
+    return _sketch_scan_topk(
+        index.select("vec_id", "sk"), embeddings, queries, index.count(),
+        probe_dim(queries, vec_col), k, rerank_frac_pct, planes, id_col, vec_col,
     )
-    return _topm_exact_rerank(scored, embeddings, queries, k, m, id_col, vec_col)
 
 
 def ann_index_frame(
@@ -710,7 +641,7 @@ def ann_index_frame(
     assign_udf = _probe_udf(cids, cmat, 1)
     if dim is None:
         dim = probe_dim(embeddings, vec_col)
-    sk_udf = _sketch_udf(dim, planes)
+    sk_udf = _packed_signs_udf(dim, planes, SKETCH_WORD_BITS)
     return embeddings.select(
         F.col(id_col).alias("vec_id"),
         F.element_at(assign_udf(F.col(vec_col)), 1).alias("cid"),
@@ -736,7 +667,7 @@ def ivf_sketch_topk(
          candidates are ONLY the probed lists' members (nprobe/nlist of the
          corpus, ≤12.5% at defaults);
       2. sketch: hamming-rank ONLY those candidates' 512-bit sketches
-         (8 XOR+POPCNTs each in codegen — vs ``sketch_topk`` which scans
+         (16 XOR+POPCNTs each in codegen — vs ``sketch_topk`` which scans
          every corpus sketch);
       3. exact: integer-cosine re-score only the top ``rerank_frac_pct``%
          of the probed set (~1.25% of the corpus at defaults).
@@ -810,8 +741,7 @@ def _ivf_sketch_from_side(
         nprobe = ivf_nprobe(nlist)
     probe_udf = _probe_udf(cids, cmat, nprobe)
     dim = probe_dim(queries, vec_col)
-    sk_udf = _sketch_udf(dim, planes)
-    words = planes // SKETCH_WORD_BITS
+    sk_udf = _packed_signs_udf(dim, planes, SKETCH_WORD_BITS)
     probes = queries.select(
         F.col(id_col).alias("query_id"),
         sk_udf(F.col(vec_col)).alias("qsk"),
@@ -828,7 +758,7 @@ def _ivf_sketch_from_side(
     scored = (
         e_side.join(F.broadcast(probes), "cid")
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", _hamming_words(words).alias("hamming"))
+        .select("query_id", "vec_id", _hamming_words(planes // SKETCH_WORD_BITS).alias("hamming"))
     )
     return _topm_exact_rerank(scored, embeddings, queries, k, m, id_col, vec_col)
 
@@ -873,6 +803,8 @@ def ann_topk(
     return fn(embeddings, queries, k=k, **kwargs)
 
 
+# --- embedding near-duplicates ----------------------------------------------------
+
 def sketch_near_dup_max_hamming(
     threshold: float, planes: int = SKETCH_PLANES
 ) -> int:
@@ -905,6 +837,24 @@ def near_dup_blocks(parallelism: int) -> int:
     return b
 
 
+def _block_pairs(id_col: str, blocks: int) -> tuple[Column, Column, Column]:
+    """Block-pair enumeration of the quadratic near-dup passes, as three
+    columns: ``blk`` puts each row in block ``xxhash64(id) % B``; over that
+    column the lo side explodes to pair keys pk = blk·B + j (j ≥ blk) and
+    the hi side to pk = i·B + blk (i ≤ blk) — an unordered pair of rows in
+    blocks (p, q), p ≤ q, meets in exactly one group, pk = p·B + q."""
+    blk = F.col("blk")
+    return (
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(blocks)).alias("blk"),
+        F.explode(
+            F.transform(F.sequence(blk, F.lit(blocks - 1)), lambda j: blk * blocks + j)
+        ).alias("pk"),
+        F.explode(
+            F.transform(F.sequence(F.lit(0), blk), lambda i: i * blocks + blk)
+        ).alias("pk"),
+    )
+
+
 def cosine_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.45,
@@ -932,13 +882,11 @@ def cosine_near_dup_pairs(
     Hamming via GEMM: h(a,b) = |a| + |b| − 2·(bits_a · bits_b) with the
     512 sketch bits unpacked to float32 — dot products ≤ 512 are exact in
     float32, so the cutoff comparison is integer-exact.  The exact verify
-    reuses the ``cosine_exact_arrow`` arithmetic verbatim: int64
-    floor-scaled dot/norms, one IEEE double divide (tests/test_similarity.py
+    is the ``cosine_exact_arrow`` arithmetic on ``_int_matrix`` components:
+    int64 dot/norms, one IEEE double divide (tests/test_similarity.py
     checks ids and cos_sim against a numpy all-pairs reference).
 
-    Each row lands in block ``xxhash64(id) % B``; the lo side is replicated
-    to block-pairs (b, b..B-1), the hi side to (0..b, b) — every unordered
-    pair meets in exactly one group (the enumeration
+    Rows meet through ``_block_pairs`` (the enumeration
     ``sketch_near_dup_candidates`` joins on).  ``blocks=None`` derives B
     from the session parallelism (``near_dup_blocks``).  An explicit
     ``repartition(n, pk)`` pins the exchange width: without it AQE
@@ -953,37 +901,14 @@ def cosine_near_dup_pairs(
         blocks = near_dup_blocks(par)
     npart = max(2 * par, 8)
     dim = probe_dim(embeddings, vec_col)
-    signs = np.array(
-        [plane_signs(p, dim) for p in range(planes)], dtype=np.int64
-    ).T  # dim × planes
+    signs = _sign_matrix(dim, planes)
     B, mh, thr = int(blocks), int(max_hamming), float(threshold)
     id_dt = embeddings.schema[id_col].dataType.simpleString()
 
-    base = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(B)).alias("blk"),
-    )
-    lo = base.select(
-        "id",
-        "vec",
-        F.explode(
-            F.transform(
-                F.sequence(F.col("blk"), F.lit(B - 1)),
-                lambda j: F.col("blk") * B + j,
-            )
-        ).alias("pk"),
-    ).repartition(npart, "pk")
-    hi = base.select(
-        "id",
-        "vec",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.col("blk")),
-                lambda i: i * B + F.col("blk"),
-            )
-        ).alias("pk"),
-    ).repartition(npart, "pk")
+    blk, lo_pk, hi_pk = _block_pairs(id_col, B)
+    base = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), blk)
+    lo = base.select("id", "vec", lo_pk).repartition(npart, "pk")
+    hi = base.select("id", "vec", hi_pk).repartition(npart, "pk")
 
     def _empty() -> pd.DataFrame:
         return pd.DataFrame(
@@ -1001,12 +926,8 @@ def cosine_near_dup_pairs(
         same_block = (pk // B) == (pk % B)
         ida = left["id"].to_numpy()
         idb = right["id"].to_numpy()
-        iva = np.floor(
-            np.stack([np.asarray(v, dtype=np.float64) for v in left["vec"]]) * SCALE
-        ).astype(np.int64)
-        ivb = np.floor(
-            np.stack([np.asarray(v, dtype=np.float64) for v in right["vec"]]) * SCALE
-        ).astype(np.int64)
+        iva = _int_matrix(left["vec"])
+        ivb = _int_matrix(right["vec"])
         ba = ((iva @ signs) > 0).astype(np.float32)
         bb = ((ivb @ signs) > 0).astype(np.float32)
         ca = ba.sum(axis=1)
@@ -1079,42 +1000,16 @@ def sketch_near_dup_candidates(
     if max_hamming is None:
         max_hamming = sketch_near_dup_max_hamming(threshold, planes)
     dim = probe_dim(embeddings, vec_col)
-    udf = _sketch_udf(dim, planes)
-    words = planes // SKETCH_WORD_BITS
-    sk = embeddings.select(
-        F.col(id_col).alias("id"),
-        udf(F.col(vec_col)).alias("sk"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(blocks)).alias("blk"),
-    )
-    # lo side owns block-pairs (blk, j) for j ≥ blk; hi side (i, blk) for
-    # i ≤ blk — an unordered pair of rows in blocks (p, q), p ≤ q, meets in
-    # exactly one join group: pk = p·B + q.
+    udf = _packed_signs_udf(dim, planes, SKETCH_WORD_BITS)
+    blk, lo_pk, hi_pk = _block_pairs(id_col, blocks)
+    sk = embeddings.select(F.col(id_col).alias("id"), udf(F.col(vec_col)).alias("sk"), blk)
     lo = sk.select(
-        F.col("id").alias("id_a"),
-        F.col("sk").alias("sk_a"),
-        F.col("blk").alias("blk_a"),
-        F.explode(
-            F.transform(
-                F.sequence(F.col("blk"), F.lit(blocks - 1)),
-                lambda j: F.col("blk") * blocks + j,
-            )
-        ).alias("pk"),
+        F.col("id").alias("id_a"), F.col("sk").alias("sk_a"), F.col("blk").alias("blk_a"), lo_pk
     )
     hi = sk.select(
-        F.col("id").alias("id_b"),
-        F.col("sk").alias("sk_b"),
-        F.col("blk").alias("blk_b"),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.col("blk")),
-                lambda i: i * blocks + F.col("blk"),
-            )
-        ).alias("pk"),
+        F.col("id").alias("id_b"), F.col("sk").alias("sk_b"), F.col("blk").alias("blk_b"), hi_pk
     )
-    hamming = sum(
-        F.bit_count(F.col("sk_a").getItem(i).bitwiseXOR(F.col("sk_b").getItem(i)))
-        for i in range(words)
-    )
+    hamming = _hamming_words(planes // SKETCH_WORD_BITS, "sk_a", "sk_b")
     return (
         lo.join(hi, "pk")
         # same-block group (pk = (b,b)) holds every ordered pair — halve it;

@@ -3,6 +3,7 @@
 at sf0.001, compare row count + column names + values (exact for
 non-floats, 1e-9-relative for floats)."""
 
+import inspect
 import math
 
 import duckdb
@@ -108,6 +109,16 @@ def test_entry_flagship(spark):
     assert {"doc_id", "cell_text", "match_score"}.issubset(set(df.columns))
 
 
-def test_all_queries_have_unique_names():
+def test_registry_is_fifty_oracled_queries_with_no_dead_bodies():
+    """The entry contract: exactly 50 queries, each mirrored by an oracle,
+    and every module-level ``_q_*`` body registered — an unregistered body
+    is never run, so it drifts from its oracle unseen."""
     q = entrymod.queries()
-    assert set(entrymod.oracle_sql()) <= set(q)
+    assert len(q) == 50
+    assert set(entrymod.oracle_sql()) == set(q)
+    registered = set(q.values())
+    dead = sorted(
+        name for name, fn in vars(entrymod).items()
+        if name.startswith("_q_") and inspect.isfunction(fn) and fn not in registered
+    )
+    assert not dead, f"unregistered query bodies: {dead}"

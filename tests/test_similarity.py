@@ -1,5 +1,5 @@
 """Similarity-path consistency: the fast native top-k (float math) must agree
-with the decimal-exact oracle twin on neighbor sets, and the LSH path must be
+with the integer-exact brute-force top-k on neighbor sets, and the LSH path must be
 a subset-recall approximation of the exact path."""
 
 import itertools
@@ -55,26 +55,48 @@ def test_lsh_results_subset_of_exact_candidates(spark, emb):
         assert r["cos_sim"] == pytest.approx(exact_all[key], rel=1e-6)
 
 
-def test_numpy_buckets_equal_column_buckets(spark, emb):
-    """The Arrow/numpy band buckets must equal a pure-Python projection:
-    bit j of band b is set iff Σᵢ floor(vᵢ·1e8)·plane_signs(b·r+j)ᵢ > 0."""
-    dim = similarity.probe_dim(emb)
-    rpb = similarity.ROWS_PER_BAND
-    signs = [similarity.plane_signs(p, dim) for p in range(similarity.BANDS * rpb)]
+@pytest.mark.parametrize(
+    "words, bits, n_vecs",
+    [
+        (similarity.BANDS, similarity.ROWS_PER_BAND, None),
+        (similarity.SKETCH_PLANES // similarity.SKETCH_WORD_BITS, similarity.SKETCH_WORD_BITS, 50),
+    ],
+    ids=["bands", "sketch"],
+)
+def test_numpy_buckets_equal_column_buckets(spark, emb, words, bits, n_vecs):
+    """The Arrow/numpy packed sign words — LSH band buckets and sketch words
+    come from one kernel — must equal a pure-Python projection: bit j of
+    word w is set iff Σᵢ floor(vᵢ·1e8)·plane_signs(w·bits+j)ᵢ > 0.  The
+    512-plane sketch case checks the first 50 vectors to stay fast."""
+    df = emb if n_vecs is None else emb.filter(F.col("vec_id") < n_vecs)
+    dim = similarity.probe_dim(df)
+    signs = [similarity.plane_signs(p, dim) for p in range(words * bits)]
     want = {}
-    for row in emb.collect():
+    for row in df.collect():
         iv = [math.floor(float(x) * similarity.SCALE) for x in row["embedding"]]
-        for b in range(similarity.BANDS):
-            want[(row["vec_id"], b)] = sum(
+        for w in range(words):
+            want[(row["vec_id"], w)] = sum(
                 1 << j
-                for j in range(rpb)
-                if sum(x * s for x, s in zip(iv, signs[b * rpb + j])) > 0
+                for j in range(bits)
+                if sum(x * s for x, s in zip(iv, signs[w * bits + j])) > 0
             )
     fast = {
         (r["id"], r["band"]): r["bucket"]
-        for r in similarity.lsh_band_buckets(emb, dim).collect()
+        for r in similarity.lsh_band_buckets(
+            df, dim, bands=words, rows_per_band=bits
+        ).collect()
     }
-    assert fast == want and len(fast) == emb.count() * similarity.BANDS
+    assert fast == want and len(fast) == df.count() * words
+
+
+def test_probe_dim_rejects_empty_frame(spark, emb):
+    """An empty frame (an empty incremental shard, an empty corpus) has no
+    dimension to probe: a ValueError naming the column, not a TypeError
+    from int(None)."""
+    with pytest.raises(ValueError, match="'embedding'.*empty"):
+        similarity.probe_dim(emb.limit(0))
+    with pytest.raises(ValueError, match="'embedding'.*empty"):
+        similarity.ann_topk(emb.limit(0), emb.limit(1), k=5)
 
 
 def test_near_dup_pairs_verified(spark, emb):
