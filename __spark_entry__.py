@@ -69,7 +69,8 @@ def _parsed(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (id(spark), sf_dir, "parsed")
     if key not in _PARSED_CACHE:
         assembled = assemble_document_text(_extraction_corpus(spark, sf_dir))
-        _PARSED_CACHE[key] = parse_documents(salted_repartition(assembled, 32)).persist()
+        width = max(spark.sparkContext.defaultParallelism * 2, 8)
+        _PARSED_CACHE[key] = parse_documents(salted_repartition(assembled, width)).persist()
     return _PARSED_CACHE[key]
 
 

@@ -15,14 +15,16 @@ Engine-design notes (100 TB shape):
 
 from __future__ import annotations
 
+import hashlib
 from collections import Counter
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
-from .text import word_shingles, words
+from .text import _java_words, word_shingles, words
 
 DEFAULT_BANDS = 8
 # 60-bit SimHash: 15 md5 hex chars is the widest prefix that converts to a
@@ -463,7 +465,33 @@ def canonical_keep(
     )
 
 
-_SIMHASH_UDF = None
+_SIMHASH_SHIFTS = np.arange(SIMHASH_BITS, dtype=np.int64)
+
+
+@F.pandas_udf(LongType())
+def _simhash_udf(texts: pd.Series) -> pd.Series:
+    """The 60-bit fingerprint per text, -1 for a text with no words."""
+    cache: dict[str, int] = {}
+
+    def h(w: str) -> int:
+        v = cache.get(w)
+        if v is None:
+            v = int(hashlib.md5(w.encode("utf-8")).hexdigest()[:15], 16)
+            cache[w] = v
+        return v
+
+    out = np.zeros(len(texts), dtype=np.int64)
+    for i, t in enumerate(texts):
+        c = Counter(_java_words(t))
+        if not c:
+            out[i] = -1
+            continue
+        hs = np.fromiter((h(w) for w in c), dtype=np.int64, count=len(c))
+        cnts = np.fromiter(c.values(), dtype=np.int64, count=len(c))
+        s = (((hs[:, None] >> _SIMHASH_SHIFTS) & 1) * cnts[:, None]).sum(axis=0)
+        tot = int(cnts.sum())
+        out[i] = int(((2 * s > tot).astype(np.int64) << _SIMHASH_SHIFTS).sum())
+    return pd.Series(out)
 
 
 def simhash_arrow(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -482,44 +510,8 @@ def simhash_arrow(df: DataFrame, text_col: str = "text") -> DataFrame:
     oracle's unnest drops them (the UDF signals them with -1, below any
     real 60-bit fingerprint); tests/test_dedup.py checks empty and
     whitespace-only docs against the oracle."""
-    global _SIMHASH_UDF
-    if _SIMHASH_UDF is None:
-        import hashlib
-        import re as _re
-
-        from pyspark.sql.types import LongType
-
-        rx = _re.compile("[ \t\n\x0b\f\r]+")  # Java \s+, as in word_shingles
-        arange = np.arange(SIMHASH_BITS, dtype=np.int64)
-
-        @F.pandas_udf(LongType())
-        def _udf(texts: pd.Series) -> pd.Series:
-            cache: dict[str, int] = {}
-
-            def h(w: str) -> int:
-                v = cache.get(w)
-                if v is None:
-                    v = int(hashlib.md5(w.encode("utf-8")).hexdigest()[:15], 16)
-                    cache[w] = v
-                return v
-
-            out = np.zeros(len(texts), dtype=np.int64)
-            for i, t in enumerate(texts):
-                ws = [w for w in rx.split((t or "").strip(" ")) if w]
-                if not ws:
-                    out[i] = -1
-                    continue
-                c = Counter(ws)
-                hs = np.fromiter((h(w) for w in c), dtype=np.int64, count=len(c))
-                cnts = np.fromiter(c.values(), dtype=np.int64, count=len(c))
-                s = (((hs[:, None] >> arange) & 1) * cnts[:, None]).sum(axis=0)
-                tot = int(cnts.sum())
-                out[i] = int(((2 * s > tot).astype(np.int64) << arange).sum())
-            return pd.Series(out)
-
-        _SIMHASH_UDF = _udf
     return df.select(
-        "doc_id", _SIMHASH_UDF(F.col(text_col)).alias("simhash")
+        "doc_id", _simhash_udf(F.col(text_col)).alias("simhash")
     ).filter(F.col("simhash") >= 0)
 
 
@@ -774,8 +766,6 @@ def containment_pairs(
     fewer than ``window_k`` words have no windows and cannot appear on
     either side.
     """
-    from .text import word_shingles
-
     # r06: per-doc array_distinct over the hashed windows IS the distinct
     # (doc, wmd5) grain, computed map-side — the three consumers (totals,
     # both join sides) previously each re-derived an explode + dedup

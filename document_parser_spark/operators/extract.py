@@ -264,12 +264,6 @@ def parse_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
     return _parse_arrow(df, keep, [text_col], _parse_text)
 
 
-def spans_output(parsed: DataFrame) -> DataFrame:
-    """The document_spans output table (doc_id, spans) — the north-rule
-    correctness surface."""
-    return parsed.select("doc_id", "spans")
-
-
 def tables_output(parsed: DataFrame) -> DataFrame:
     """One row per (doc_id, table): the structured-table side table."""
     t = parsed.select("doc_id", F.explode("tables").alias("t"))

@@ -2,17 +2,37 @@
 (doc_id, text, …) — the training-data-pipeline layer: token counting,
 quality scoring, language ID, fingerprinting.
 
-All pure Column algebra (whole-stage codegen; no Python in the hot path).
-Counts and ratios are emitted as exact integers wherever possible so the
-DuckDB oracle comparison is hash-stable; ratios derived from them are
-double divisions of identical integers (bit-identical across engines).
+Signals that one codegen'd projection can compute stay Column algebra
+(``words``, ``text_stats``, ``scrub_pii``).  Passes that Column algebra
+would make quadratic per document, or run as interpreted higher-order
+lambdas (shingles, bigram counts, classifier score, repetition stats,
+language ID), are pandas UDFs: a module-level ``@F.pandas_udf`` when the
+pass has no parameter, an ``lru_cache``d factory when it does.  Every one
+of them splits words with ``_java_words``, the one Python copy of
+``words()``'s tokenization.  Counts and ratios are emitted as exact
+integers wherever possible so the DuckDB oracle comparison is hash-stable;
+ratios derived from them are double divisions of identical integers
+(bit-identical across engines).
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import re
+from collections import Counter
+
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 # Frozen stopword lists for the n-gram/stopword language heuristic.  These are
 # deliberately tiny — the heuristic's value is its shape (per-language hit
@@ -27,6 +47,12 @@ STOPWORDS = {
 _WORD_SPLIT = r"\s+"
 #: BPE-ish tokenizer regex: word pieces, numbers, or single non-space symbols.
 BPE_ISH_TOKEN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
+#: ASCII punctuation, the class the quality gate's density rule counts.
+_PUNCT_CLASS = r"[!-/:-@\[-`{-~]"
+# Java's ``\s`` as an explicit class: Python's ``\s`` is unicode-wide (NBSP,
+# the \x1c-\x1f separators, NEL, U+2028, …) while Java's, which ``words()``
+# splits on in Spark, is ASCII, so the Python passes split on this class.
+_JAVA_WS = re.compile("[ \t\n\x0b\f\r]+")
 
 
 def words(col: Column) -> Column:
@@ -34,60 +60,23 @@ def words(col: Column) -> Column:
     return F.filter(F.split(F.trim(col), _WORD_SPLIT), lambda w: w != "")
 
 
-def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Whitespace + BPE-ish token counts, char count, mean word length ×100
-    as exact integer arithmetic."""
-    t = F.col(text_col)
-    w = words(t)
-    return df.select(
-        "doc_id",
-        F.length(t).cast("long").alias("n_chars_exact"),
-        F.size(w).cast("long").alias("n_words"),
-        F.regexp_count(t, F.lit(BPE_ISH_TOKEN)).cast("long").alias("n_tokens_bpeish"),
-        F.aggregate(w, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)).alias(
-            "sum_word_len"
-        ),
-    )
-
-
-def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Length / punctuation / stopword / digit signals per document.
-
-    Counts are exact longs; `quality_ok` is the boolean headline gate a
-    training pipeline would filter on."""
-    t = F.col(text_col)
-    w = words(t)
-    n_words = F.size(w)
-    stop_hits = F.size(F.filter(w, lambda x: F.lower(x).isin(*STOPWORDS["en"])))
-    # regexp_count, not length(regexp_replace(...)): identical integers,
-    # but the replace materializes a stripped copy of every document
-    # (measured r04: +18.9 s vs +0.7 s over 45k docs at 16 cores)
-    n_punct = F.regexp_count(t, F.lit(r"[!-/:-@\[-`{-~]"))
-    n_digits = F.regexp_count(t, F.lit(r"[0-9]"))
-    n_chars = F.length(t)
-    return df.select(
-        "doc_id",
-        n_chars.cast("long").alias("n_chars_exact"),
-        n_words.cast("long").alias("n_words"),
-        stop_hits.cast("long").alias("stopword_hits"),
-        n_punct.cast("long").alias("punct_chars"),
-        n_digits.cast("long").alias("digit_chars"),
-        (
-            (n_words >= 5)
-            & (n_chars >= 20)
-            & (n_punct * 2 < F.greatest(n_chars, F.lit(1)))
-        ).alias("quality_ok"),
-    )
+def _java_words(text: str | None) -> list[str]:
+    """``words()`` in Python: split on the Java ``\\s`` class and drop empty
+    words (which also covers the ``trim``); null text has no words.  Every
+    Arrow text pass tokenizes through this helper."""
+    return [w for w in _JAVA_WS.split(text) if w] if text else []
 
 
 def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """token_stats ∪ quality_scores in ONE map-only projection.
+    """Token counts (whitespace words, BPE-ish tokens, Σ word length) and
+    quality signals (length / punctuation / stopword / digit counts, and the
+    boolean ``quality_ok`` gate a training pipeline filters on) per
+    document, as exact longs in ONE map-only projection.
 
     The two families share the word split and char count; computing all
     eight signals in a single Project keeps one pass over the text (no join,
-    no shuffle) — the shape a 100 TB curation scan actually wants.  Kept as
-    the contract-query surface (`text_stats`); the narrower ``token_stats``/
-    ``quality_scores`` remain for callers that want one family."""
+    no shuffle) — the shape a 100 TB curation scan actually wants.  It is
+    the contract-query surface (`text_stats`)."""
     t = F.col(text_col)
     w = words(t)
     n_words = F.size(w)
@@ -96,7 +85,7 @@ def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     # regexp_count, not length(regexp_replace(...)): identical integers,
     # but the replace materializes a stripped copy of every document
     # (measured r04: +18.9 s vs +0.7 s over 45k docs at 16 cores)
-    n_punct = F.regexp_count(t, F.lit(r"[!-/:-@\[-`{-~]"))
+    n_punct = F.regexp_count(t, F.lit(_PUNCT_CLASS))
     n_digits = F.regexp_count(t, F.lit(r"[0-9]"))
     return df.select(
         "doc_id",
@@ -117,80 +106,55 @@ def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-_LANG_WORDS_UDF = None
+_LANGS = sorted(STOPWORDS)
+#: stopword → indices into ``_LANGS`` of the languages that list it
+_WORD_LANGS = {
+    sw: [li for li, lang in enumerate(_LANGS) if sw in STOPWORDS[lang]]
+    for sws in STOPWORDS.values()
+    for sw in sws
+}
 
 
-def language_words_arrow(col: Column) -> Column:
+@F.pandas_udf(
+    StructType(
+        [
+            StructField("hits", IntegerType()),
+            StructField("lang", StringType()),
+            StructField("n_words", LongType()),
+        ]
+    )
+)
+def language_words_arrow(col: pd.Series) -> pd.DataFrame:
     """Per-document stopword-hit language argmax PLUS the word count, in one
     Arrow pass: struct<hits:int, lang:string, n_words:long>.
 
     Measured r04 (16 cores, 45k ~850-word docs): an interpreted
     higher-order aggregate adds +11.2 s to the stage, this pass +1.8 s with
-    the word count included.  It lowers the text once (C-speed), splits on
-    the Java-``\\s`` class, folds the split through a ``Counter`` so each
+    the word count included.  It lowers the text once (C-speed), splits it
+    with ``_java_words``, folds the words through a ``Counter`` so each
     DISTINCT word pays ONE dict probe against a word→language-indices
     table, and argmaxes with the identical (hits, lang) struct-max
     tie-break (greatest hits, then greatest language code).  Checked against
     the ``language_id`` and ``text_stats`` DuckDB oracles on an adversarial
     corpus in tests/test_curate_run.py."""
-    global _LANG_WORDS_UDF, _JAVA_WS_RX
-    if _JAVA_WS_RX is None:
-        import re as _re
-
-        _JAVA_WS_RX = _re.compile("[ \t\n\x0b\f\r]+")
-    if _LANG_WORDS_UDF is None:
-        from collections import Counter
-
-        from pyspark.sql.types import (
-            IntegerType,
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-        )
-
-        langs = sorted(STOPWORDS)
-        word_langs: dict = {}
-        for li, lang in enumerate(langs):
-            for sw in STOPWORDS[lang]:
-                word_langs.setdefault(sw, []).append(li)
-        out_type = StructType(
-            [
-                StructField("hits", IntegerType()),
-                StructField("lang", StringType()),
-                StructField("n_words", LongType()),
-            ]
-        )
-        split = _JAVA_WS_RX.split
-        get = word_langs.get
-        nlang = len(langs)
-
-        @F.pandas_udf(out_type)
-        def lang_udf(texts: pd.Series) -> pd.DataFrame:
-            hits_col, lang_col, n_col = [], [], []
-            for t in texts:
-                counts = Counter(split((t or "").lower()))
-                counts.pop("", None)
-                per_lang = [0] * nlang
-                for w, c in counts.items():
-                    lis = get(w)
-                    if lis is not None:
-                        for li in lis:
-                            per_lang[li] += c
-                best_hits, best_lang = max(zip(per_lang, langs))
-                hits_col.append(best_hits)
-                lang_col.append(best_lang)
-                n_col.append(sum(counts.values()))
-            return pd.DataFrame(
-                {
-                    "hits": pd.Series(hits_col, dtype="int32"),
-                    "lang": lang_col,
-                    "n_words": pd.Series(n_col, dtype="int64"),
-                }
-            )
-
-        _LANG_WORDS_UDF = lang_udf
-    return _LANG_WORDS_UDF(col)
+    hits_col, lang_col, n_col = [], [], []
+    for t in col:
+        counts = Counter(_java_words(t and t.lower()))
+        per_lang = [0] * len(_LANGS)
+        for w, c in counts.items():
+            for li in _WORD_LANGS.get(w, ()):
+                per_lang[li] += c
+        best_hits, best_lang = max(zip(per_lang, _LANGS))
+        hits_col.append(best_hits)
+        lang_col.append(best_lang)
+        n_col.append(sum(counts.values()))
+    return pd.DataFrame(
+        {
+            "hits": pd.Series(hits_col, dtype="int32"),
+            "lang": lang_col,
+            "n_words": pd.Series(n_col, dtype="int64"),
+        }
+    )
 
 
 def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -293,52 +257,19 @@ def bigram_novelty(
     )
 
 
-_BIGRAM_COUNTS_UDF = None
-
-
-def _bigram_counts_arrow(col: Column) -> Column:
+@F.pandas_udf(
+    ArrayType(StructType([StructField("bg", StringType()), StructField("cnt", LongType())]))
+)
+def _bigram_counts_arrow(texts: pd.Series) -> pd.Series:
     """array<struct<bg:string, cnt:long>> — the doc's DISTINCT word bigrams
-    with their occurrence counts, one linear pass (byte-identical Java-\\s
-    split twin; bigram text joined by a single space exactly like
-    word_shingles(k=2)).  Empty array when the doc has < 2 words."""
-    global _BIGRAM_COUNTS_UDF, _JAVA_WS_RX
-    if _JAVA_WS_RX is None:
-        import re as _re
-
-        _JAVA_WS_RX = _re.compile("[ \t\n\x0b\f\r]+")
-    if _BIGRAM_COUNTS_UDF is None:
-        from collections import Counter
-
-        from pyspark.sql.types import (
-            ArrayType,
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-        )
-
-        out_type = ArrayType(
-            StructType(
-                [StructField("bg", StringType()), StructField("cnt", LongType())]
-            )
-        )
-
-        @F.pandas_udf(out_type)
-        def bigram_counts_udf(texts: pd.Series) -> pd.Series:
-            out = []
-            for t in texts:
-                ws = [w for w in _JAVA_WS_RX.split((t or "").strip(" ")) if w]
-                if len(ws) < 2:
-                    out.append([])
-                    continue
-                c = Counter(
-                    a + " " + b for a, b in zip(ws, ws[1:])
-                )
-                out.append(list(c.items()))
-            return pd.Series(out)
-
-        _BIGRAM_COUNTS_UDF = bigram_counts_udf
-    return _BIGRAM_COUNTS_UDF(col)
+    with their occurrence counts, one linear pass over ``_java_words``
+    (bigram text joined by a single space exactly like word_shingles(k=2)).
+    Empty array when the doc has < 2 words."""
+    out = []
+    for t in texts:
+        ws = _java_words(t)
+        out.append(list(Counter(a + " " + b for a, b in zip(ws, ws[1:])).items()))
+    return pd.Series(out)
 
 
 #: Hashing-trick classifier dials (frozen — part of the oracle surface).
@@ -348,8 +279,6 @@ _CLF_A = 2654435761  # Knuth's 2^32 / phi multiplier (public constant)
 _CLF_B = 97
 _CLF_M = 21
 _CLF_HALF = 10  # (M-1)/2 → weights centered on 0
-
-_CLF_UDF = None
 
 
 def _clf_bucket(x: Column) -> Column:
@@ -431,51 +360,60 @@ def hash_classifier_score(
     )
 
 
-def _clf_score_arrow(col: Column) -> Column:
+@F.pandas_udf(LongType())
+def _clf_score_arrow(texts: pd.Series) -> pd.Series:
     """Arrow-batched score: one linear pass per doc with a batch-level
     feature→weight cache (Zipfian token streams repeat heavily — the simhash
     batch-cache precedent).  md5 of the UTF-8 bytes matches Spark/DuckDB
     ``md5()`` exactly."""
-    global _CLF_UDF, _JAVA_WS_RX
-    if _JAVA_WS_RX is None:
-        import re as _re
+    cache: dict = {}
 
-        _JAVA_WS_RX = _re.compile("[ \t\n\x0b\f\r]+")
-    if _CLF_UDF is None:
-        import hashlib
+    def wgt(f):
+        v = cache.get(f)
+        if v is None:
+            h = int(hashlib.md5(f.encode("utf-8")).hexdigest()[:8], 16) % CLF_N_BUCKETS
+            v = (h * _CLF_A + _CLF_B) % _CLF_M - _CLF_HALF
+            cache[f] = v
+        return v
 
-        from pyspark.sql.types import LongType
-
-        nb, a, b, m, half = CLF_N_BUCKETS, _CLF_A, _CLF_B, _CLF_M, _CLF_HALF
-
-        @F.pandas_udf(LongType())
-        def clf_udf(texts: pd.Series) -> pd.Series:
-            cache: dict = {}
-
-            def wgt(f):
-                v = cache.get(f)
-                if v is None:
-                    h = int(hashlib.md5(f.encode("utf-8")).hexdigest()[:8], 16) % nb
-                    v = (h * a + b) % m - half
-                    cache[f] = v
-                return v
-
-            out = []
-            for t in texts:
-                ws = [x for x in _JAVA_WS_RX.split((t or "").strip(" ")) if x]
-                s = 0
-                for x in ws:
-                    s += wgt(x)
-                for i in range(len(ws) - 1):
-                    s += wgt(ws[i] + " " + ws[i + 1])
-                out.append(s)
-            return pd.Series(out, dtype="int64")
-
-        _CLF_UDF = clf_udf
-    return _CLF_UDF(col)
+    out = []
+    for t in texts:
+        ws = _java_words(t)
+        s = 0
+        for x in ws:
+            s += wgt(x)
+        for a, b in zip(ws, ws[1:]):
+            s += wgt(a + " " + b)
+        out.append(s)
+    return pd.Series(out, dtype="int64")
 
 
-_REP_STATS_UDF = None
+_REP_FIELDS = [
+    "n_words",
+    "n_distinct_words",
+    "top_word_count",
+    "n_bigrams",
+    "top_bigram_count",
+]
+
+
+@F.pandas_udf(StructType([StructField(f, LongType()) for f in _REP_FIELDS]))
+def _repetition_stats_arrow(texts: pd.Series) -> pd.DataFrame:
+    rows = []
+    for t in texts:
+        ws = _java_words(t)
+        wc = Counter(ws)
+        bc = Counter(zip(ws, ws[1:]))
+        rows.append(
+            (
+                len(ws),
+                len(wc),
+                max(wc.values(), default=0),
+                max(len(ws) - 1, 0),
+                max(bc.values(), default=0),
+            )
+        )
+    return pd.DataFrame(rows, columns=_REP_FIELDS)
 
 
 def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -487,48 +425,12 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     whole operator is ONE Arrow map pass (per-doc Counter — the pinned
     "per-document computations beat explode+groupBy" lesson): zero
     shuffles, no joins, where the exploded form paid two exploded
-    two-level aggregations plus two left joins.  The split is the
-    Java-\\s split used by word_shingles; tests/test_dedup.py checks the
-    pass against the ``repetition_stats`` DuckDB oracle."""
-    global _REP_STATS_UDF, _JAVA_WS_RX
-    if _JAVA_WS_RX is None:
-        import re as _re
-
-        _JAVA_WS_RX = _re.compile("[ \t\n\x0b\f\r]+")
-    if _REP_STATS_UDF is None:
-        from collections import Counter
-
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        fields = [
-            "n_words",
-            "n_distinct_words",
-            "top_word_count",
-            "n_bigrams",
-            "top_bigram_count",
-        ]
-
-        @F.pandas_udf(StructType([StructField(f, LongType()) for f in fields]))
-        def rep_udf(texts: pd.Series) -> pd.DataFrame:
-            rows = []
-            for t in texts:
-                ws = [w for w in _JAVA_WS_RX.split((t or "").strip(" ")) if w]
-                if not ws:
-                    rows.append((0, 0, 0, 0, 0))
-                    continue
-                wc = Counter(ws)
-                if len(ws) > 1:
-                    bc = Counter(zip(ws, ws[1:]))
-                    nb, tb = len(ws) - 1, max(bc.values())
-                else:
-                    nb, tb = 0, 0
-                rows.append((len(ws), len(wc), max(wc.values()), nb, tb))
-            return pd.DataFrame(rows, columns=fields)
-
-        _REP_STATS_UDF = rep_udf
-    return df.select("doc_id", _REP_STATS_UDF(F.col(text_col)).alias("_r")).select(
-        "doc_id", "_r.*"
-    )
+    two-level aggregations plus two left joins.  The split is
+    ``_java_words``; tests/test_dedup.py checks the pass against the
+    ``repetition_stats`` DuckDB oracle."""
+    return df.select(
+        "doc_id", _repetition_stats_arrow(F.col(text_col)).alias("_r")
+    ).select("doc_id", "_r.*")
 
 
 #: PII patterns kept to the Java-regex ∩ RE2 common subset so the DuckDB
@@ -553,9 +455,6 @@ def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-# Java-regex \s equivalent as an explicit class: Python's \s is
-# unicode-wide (NBSP etc.) while Spark's and DuckDB's are ASCII — the
-# shingle UDF must split EXACTLY like words()/the SQL oracles do.
 def tfidf_topk(
     df: DataFrame,
     text_col: str = "text",
@@ -576,8 +475,6 @@ def tfidf_topk(
     action); the final per-doc top-k is a rank window partitioned by
     doc_id — no pair joins anywhere, every shuffle keyed and combinable.
     """
-    from pyspark.sql import Window
-
     # r06: document frequency from the map-side-distinct per-doc word set
     # (explode of array_distinct — no dedup shuffle, plain count instead of
     # a two-phase countDistinct over the full token stream).
@@ -612,8 +509,19 @@ def tfidf_topk(
     )
 
 
-_JAVA_WS_RX = None
-_SHINGLE_UDFS: dict = {}
+@functools.lru_cache(maxsize=None)
+def _shingles_udf(k: int):
+    """The k-word shingle pass, one pandas UDF per ``k``."""
+
+    @F.pandas_udf(ArrayType(StringType()))
+    def shingle_udf(texts: pd.Series) -> pd.Series:
+        out = []
+        for t in texts:
+            ws = _java_words(t)
+            out.append([" ".join(ws[i : i + k]) for i in range(len(ws) - k + 1)])
+        return pd.Series(out)
+
+    return shingle_udf
 
 
 def word_shingles(col: Column, k: int = 3) -> Column:
@@ -625,32 +533,7 @@ def word_shingles(col: Column, k: int = 3) -> Column:
     re-evaluates the WHOLE word split for every element — higher-order
     lambdas don't share subexpressions — making shingling O(words²) per
     document.  Harmless at 200 words, a stall at 50k (pathological web
-    docs).  The UDF is one linear pass per doc; outputs are byte-identical
-    (ASCII-whitespace split, exactly Spark's ``split(trim(x), '\\s+')``) —
+    docs).  The UDF is one linear pass per doc over ``_java_words``, so
+    outputs are byte-identical to Spark's ``split(trim(x), '\\s+')`` —
     tests/test_dedup.py checks it against a pure-Python split."""
-    global _JAVA_WS_RX
-    if _JAVA_WS_RX is None:
-        import re as _re
-
-        _JAVA_WS_RX = _re.compile("[ \t\n\x0b\f\r]+")
-    if k not in _SHINGLE_UDFS:
-        from pyspark.sql.types import ArrayType, StringType
-
-        def make(kk: int):
-            @F.pandas_udf(ArrayType(StringType()))
-            def shingle_udf(texts: pd.Series) -> pd.Series:
-                out = []
-                for t in texts:
-                    ws = [w for w in _JAVA_WS_RX.split((t or "").strip(" ")) if w]
-                    if len(ws) < kk:
-                        out.append([])
-                    else:
-                        out.append(
-                            [" ".join(ws[i : i + kk]) for i in range(len(ws) - kk + 1)]
-                        )
-                return pd.Series(out)
-
-            return shingle_udf
-
-        _SHINGLE_UDFS[k] = make(k)
-    return _SHINGLE_UDFS[k](col)
+    return _shingles_udf(k)(col)

@@ -9,12 +9,12 @@ sort-merge against any table bucketed the same way — the batch twin of
 co-partitioned state.
 
 Spark only honors bucket metadata through the catalog (``saveAsTable``),
-not bare parquet paths — these helpers wrap that so callers can't lose the
-bucketing by writing to a path."""
+not bare parquet paths — ``write_bucketed`` wraps that so callers can't
+lose the bucketing by writing to a path."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -32,18 +32,3 @@ def write_bucketed(
         writer = writer.sortBy(*sort_cols)
     writer.format("parquet").saveAsTable(table)
 
-
-def bucketed_cells_table(
-    spark: SparkSession,
-    cells: DataFrame,
-    table: str = "cells_bucketed",
-    num_buckets: int = 64,
-) -> DataFrame:
-    """The persisted search index: cells bucketed by doc_id so J1/J2 row
-    re-joins and per-doc aggregations co-locate without exchanging the
-    (huge) cells side."""
-    write_bucketed(
-        cells, table, bucket_cols=["doc_id"], num_buckets=num_buckets,
-        sort_cols=["doc_id", "table_index", "row", "col"],
-    )
-    return spark.table(table)

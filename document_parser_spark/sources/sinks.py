@@ -90,13 +90,6 @@ def write_markdown(parsed: DataFrame, path: str) -> None:
     parsed.select("doc_id", md.alias("markdown")).write.mode("overwrite").json(path)
 
 
-def write_media(media: DataFrame, path: str) -> None:
-    """K5: the media side-table (doc_id, media_ref, bytes) as parquet —
-    binary-safe, partition-pruned by doc bucket
-    (use_marker_converter.py:613-623 writes loose files)."""
-    media.write.mode("overwrite").parquet(path)
-
-
 # --- K6: DOCX exporter --------------------------------------------------------
 
 def docx_table_runs(markdown_table: str):

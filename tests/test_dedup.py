@@ -2,6 +2,7 @@
 exhaustive definition exactly; banded MinHash must find verified near-dups
 with exact integer set arithmetic."""
 
+import hashlib
 import itertools
 from collections import Counter
 
@@ -400,6 +401,117 @@ def test_word_shingles_arrow_equals_column_twin(spark):
     assert got == want
     assert got[5] == ["a\u00a0b c d"]
     assert len(got[6]) == 2998
+
+
+#: Separators only Python's unicode ``\s`` knows (NBSP, \x1c-\x1f, NEL,
+#: U+2028, U+3000) next to the ASCII ones Java's ``\s`` splits on (CRLF,
+#: lone \x0b / \f, leading/trailing tabs), plus empty and null text.
+WS_ROWS = [
+    (1, "the\u00a0and of\u00a0 the a\u00a0b"),
+    (2, "w\x1cx\x1dy\x1ez\x1fq the q r"),
+    (3, "nel\x85word line\u2028sep ideo\u3000space the"),
+    (4, "crlf\r\nline\r\nthe\r\nline\r\n"),
+    (5, "vt\x0bonly ff\fonly vt\x0bonly"),
+    (6, "\t\tlead and trail\t\t"),
+    (7, "  The the  cat the cat  "),
+    (8, ""),
+    (9, None),
+    (10, "one"),
+]
+
+
+def _clf_weight(feature):
+    h = int(hashlib.md5(feature.encode("utf-8")).hexdigest()[:8], 16) % (1 << 18)
+    return (h * 2654435761 + 97) % 21 - 10
+
+
+def _simhash_reference(ws):
+    c = Counter(ws)
+    hs = {w: int(hashlib.md5(w.encode("utf-8")).hexdigest()[:15], 16) for w in c}
+    return sum(
+        1 << i
+        for i in range(dedup.SIMHASH_BITS)
+        if 2 * sum(n for w, n in c.items() if hs[w] >> i & 1) > len(ws)
+    )
+
+
+def _ws_pass(spark, name):
+    """(got, want): one Arrow text pass over WS_ROWS, keyed by doc_id, and
+    the same output derived from the ``_java_words`` reference."""
+    from document_parser_spark.operators import text as T
+    from document_parser_spark.operators.curation import chunk_documents
+
+    df = spark.createDataFrame(WS_ROWS, "doc_id long, text string")
+    t = F.col("text")
+    ref = {d: _java_words(text) for d, text in WS_ROWS}
+    bigrams = {d: [a + " " + b for a, b in zip(ws, ws[1:])] for d, ws in ref.items()}
+    if name == "spark_words":
+        got = {r[0]: r[1] or [] for r in df.select("doc_id", T.words(t)).collect()}
+        return got, ref
+    if name.startswith("shingles_"):
+        k = int(name[-1])
+        got = dict(df.select("doc_id", T.word_shingles(t, k)).collect())
+        want = {d: [" ".join(ws[i : i + k]) for i in range(len(ws) - k + 1)] for d, ws in ref.items()}
+        return got, want
+    if name == "bigram_counts":
+        rows = df.select("doc_id", T._bigram_counts_arrow(t)).collect()
+        return {d: dict(bcs) for d, bcs in rows}, {d: dict(Counter(b)) for d, b in bigrams.items()}
+    if name == "repetition_stats":
+        got = {r[0]: tuple(r[1:]) for r in T.repetition_stats(df).collect()}
+        want = {
+            d: (
+                len(ws),
+                len(set(ws)),
+                max(Counter(ws).values(), default=0),
+                len(bigrams[d]),
+                max(Counter(bigrams[d]).values(), default=0),
+            )
+            for d, ws in ref.items()
+        }
+        return got, want
+    if name == "chunks":
+        got = {}
+        for r in chunk_documents(df, max_words=2, stride=1).collect():
+            got.setdefault(r["doc_id"], {})[r["chunk_id"]] = r["chunk_text"]
+        want = {d: dict(enumerate(" ".join(ws[s : s + 2]) for s in range(len(ws)))) for d, ws in ref.items() if ws}
+        return got, want
+    if name == "language_words":
+        got = dict(df.select("doc_id", T.language_words_arrow(t)["n_words"]).collect())
+        return got, {d: len(_java_words(text and text.lower())) for d, text in WS_ROWS}
+    if name == "clf":
+        got = {r["doc_id"]: (r["clf_score"], r["n_feats"]) for r in T.hash_classifier_score(df).collect()}
+        want = {
+            d: (sum(map(_clf_weight, ws + bigrams[d])), len(ws + bigrams[d]))
+            for d, ws in ref.items()
+        }
+        return got, want
+    assert name == "simhash"
+    got = dict(dedup.simhash_arrow(df).collect())
+    return got, {d: _simhash_reference(ws) for d, ws in ref.items() if ws}
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "spark_words",
+        "shingles_1",
+        "shingles_2",
+        "shingles_3",
+        "bigram_counts",
+        "repetition_stats",
+        "chunks",
+        "language_words",
+        "clf",
+        "simhash",
+    ],
+)
+def test_text_passes_split_on_java_whitespace(spark, name):
+    """Every Arrow text pass tokenizes like Spark's ``words()``: on the
+    ASCII Java ``\\s`` class only, empty words dropped, null text wordless
+    — checked against the pure-Python ``_java_words`` reference on
+    adversarial whitespace (``spark_words`` pins the reference itself)."""
+    got, want = _ws_pass(spark, name)
+    assert got == want
 
 
 def test_decontamination_overlap_semantics(spark):

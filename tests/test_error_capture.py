@@ -70,6 +70,7 @@ def test_segment_errors_use_the_shared_capture():
 def test_error_rows_counted_in_lineage(spark):
     from pyspark.sql import functions as F
 
+    from document_parser_spark.plans.resume import lineage_metrics
     from document_parser_spark.schemas import PARSE_RESULT
     import pyspark.sql.types as T
 
@@ -81,12 +82,9 @@ def test_error_rows_counted_in_lineage(spark):
         ("ok-doc", [{"kind": "text", "text": "fine", "media_ref": None, "offset": 0}], [], None),
         ("bad-doc", [{"kind": "error", "text": "ValueError: x", "media_ref": None, "offset": 0}], [], "ValueError: x"),
     ]
-    parsed = spark.createDataFrame(rows, schema)
-    agg = parsed.agg(
-        F.count("*").alias("docs"),
-        F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("errors"),
-    ).first()
-    assert (agg["docs"], agg["errors"]) == (2, 1)
+    parsed = spark.createDataFrame(rows, schema).withColumn("bucket", F.lit(0))
+    lineage = lineage_metrics(parsed, "run-1", 0).first()
+    assert (lineage["doc_count"], lineage["error_count"]) == (2, 1)
     kinds = dict(
         parsed.select("doc_id", F.col("spans")[0]["kind"].alias("k")).collect()
     )

@@ -1,8 +1,8 @@
 """Package-wide guards: each operator has one implementation in the library.
 Cross-checks compare against oracle SQL or a test-local reference, so no
 ``document_parser_spark`` function may be a ``*_twin`` or take an ``impl``
-or ``verify`` selector between alternative paths, and parse results are
-built in one place only."""
+or ``verify`` selector between alternative paths, parse results are built
+in one place only, and the Python word split is written once."""
 
 import ast
 import pathlib
@@ -16,6 +16,11 @@ SELECTOR_PARAMS = {"impl", "verify"}
 #: where they are declared and the one Arrow builder of parse results
 PARSE_SCHEMA_NAMES = {"PARSE_RESULT", "SPANS"}
 PARSE_BUILDER_MODULES = {"schemas.py", "operators/extract.py"}
+
+#: source text of the Java ``\s`` class, spelled out only by the one
+#: Python tokenizer (``operators.text._java_words``)
+JAVA_WS_LITERAL = r"\x0b\f\r"
+TOKENIZER_MODULE = "operators/text.py"
 
 
 def _functions():
@@ -58,4 +63,27 @@ def test_parse_results_built_in_one_place():
             offenders += [f"{module}:{node.lineno} {n}" for n in names if n in PARSE_SCHEMA_NAMES]
     assert not offenders, (
         f"parse results have one builder (operators.extract._parse_arrow): {offenders}"
+    )
+
+
+def test_java_whitespace_class_written_once():
+    modules = [
+        path.relative_to(PACKAGE).as_posix()
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if JAVA_WS_LITERAL in path.read_text(encoding="utf-8")
+    ]
+    assert modules == [TOKENIZER_MODULE], (
+        f"split words with operators.text._java_words, not a copy of its class: {modules}"
+    )
+
+
+def test_no_global_statements_in_operators():
+    offenders = []
+    for path in sorted((PACKAGE / "operators").rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.Global):
+                offenders.append(f"{path.relative_to(PACKAGE).as_posix()}:{node.lineno} {node.names}")
+    assert not offenders, (
+        "operators build their UDFs at module level or in lru_cache'd factories, "
+        f"never in lazily assigned globals: {offenders}"
     )
